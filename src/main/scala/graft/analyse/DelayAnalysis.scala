@@ -33,7 +33,8 @@ final case class DefaultCurveRow(route_type: Int, route_section: Int,
   *   records ⋈ schedule stop lists → gap-filled projections (W1)
   *     → groupBy (variant, stop, slot, event)         → general curves (A8)
   *     → self-join on vehicle → groupBy stop pairs    → curve sets (J3+A7)
-  *     → groupBy (route_type, section, slot, event)   → default hierarchy (A9)
+  *   records → groupBy (route_type, section, slot, event, variant) → leaves
+  *     → collected, cascaded on the driver             → default hierarchy (A9)
   *
   * Scale notes: every aggregation is keyed by (route_variant, …) so the
   * shuffle partitions by variant — the natural unit of locality; the
@@ -289,16 +290,17 @@ object DelayAnalysis {
     *
     * Grid: the reference's 11 route types × 3 sections × the 11 real time
     * slots (TIME_SLOTS, no Default — `default_curves.rs:136`) × 2 events.
-    * Every cell is filled by the cascade, so any lookup key over those
-    * dimensions resolves. The cascade is a cross of the dimension values
-    * left-joined through the three levels with coalesce — no driver loops,
-    * and the three averaging levels are codegen'd collect_list aggregations
-    * sharing the one cached leaf table (dimension-sized: #variants × 66
-    * cells at most). */
+    *
+    * Only step 1 runs in Spark: it aggregates the records. Its output is
+    * dimension-sized (at most #variants × 66 leaves — the same set the
+    * reference's `default_curves.rs` holds in one process), so the leaves
+    * are collected and steps 2-4 average them on the driver; the result is
+    * a local relation. With at least one leaf every grid cell is filled, so
+    * any lookup key over those dimensions resolves; with no leaves (no
+    * records) the table is empty. */
   def defaultCurves(records: DataFrame, schedule: GtfsStatic.Schedule,
                     routes: DataFrame): DataFrame = {
     val spark = records.sparkSession
-    import spark.implicits._
     val stops = scheduleStops(schedule)
       .select("trip_id", "stop_sequence", "stop_index", "stop_count",
         "arrival_secs", "departure_secs")
@@ -328,95 +330,89 @@ object DelayAnalysis {
     //    generalDelayCurves for the rationale)
     val leafUdf = udf((delays: Seq[Float]) =>
       CurveBuilder.defaultCurve(delays).map { cd =>
-        (cd.sampleSize, cd.curve.points.map(p => CurvePoint(p._1, p._2)))
+        (cd.sampleSize, cd.curve.points.map(_._1).toArray, cd.curve.points.map(_._2).toArray)
       }).asNondeterministic() // pure; collapse barrier — see generalDelayCurves
     val leaves = events
       .groupBy(col("route_type"), col("route_section"), col("time_slot_id"),
         col("event_type"), col("route_variant"))
       .agg(collect_list(col("delay").cast("float")).as("delays"))
-      .withColumn("built", leafUdf(col("delays")))
+      .select(col("route_type"), col("route_section"), col("time_slot_id"),
+        col("event_type"), leafUdf(col("delays")).as("built"))
       .filter(col("built").isNotNull)
       .select(col("route_type"), col("route_section"), col("time_slot_id"),
-        col("event_type"),
-        col("built._1").as("sample_size"), col("built._2").as("points"))
-      .cache()
+        col("event_type"), col("built._1"), col("built._2"), col("built._3"))
+      .collect()
+      .map { r =>
+        DefaultLeaf(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4),
+          r.getSeq[Float](5).toArray, r.getSeq[Float](6).toArray)
+      }
+      // Float summation is not order-stable: average in a CANONICAL order
+      // (sample_size, then raw points), independent of the collect order
+      // (GoldenParitySpec walks the same order); groupBy keeps it per group
+      .sortWith(DefaultLeaf.canonicalLt)
+      .toSeq
 
-    // Curve averaging over a collected group: reference CurveData::average
-    // (`src/types/curve_data.rs:21-43` — sample_size = Σ/len, integer div)
-    // followed by the cascade's post-average simplify. Float summation is
-    // not order-stable, and collect_list order follows shuffle layout — so
-    // the pool is sorted into a CANONICAL order (sample_size, then raw
-    // points) before averaging; the result is then independent of
-    // partitioning/hash layout and reproducible across cluster sizes
-    // (GoldenParitySpec walks the same order).
-    def avgUdf(preSimplifyEps: Option[Float], postEps: Float) =
-      udf((rows: Seq[org.apache.spark.sql.Row]) => {
-        import scala.math.Ordering.Implicits._
-        val parsed = rows.map { r =>
-          (r.getInt(0), r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]](1)
-            .map(p => (p.getFloat(0), p.getFloat(1))).toVector)
-        }.sortBy(x => (x._1, x._2: scala.collection.Seq[(Float, Float)]))
-        val curves = parsed.map { case (_, pts) =>
-          val c = Curve(pts)
-          preSimplifyEps.fold(c)(c.simplify)
-        }
-        val n = parsed.map(_._1).sum / parsed.length
-        val avg = Curve.average(curves).simplify(postEps)
-        (n, avg.points.map(p => CurvePoint(p._1, p._2)))
-      }).asNondeterministic() // pure; collapse barrier — see generalDelayCurves
-    val cellStructs = collect_list(struct(col("sample_size"), col("points")))
-
-    // 2. General per cell
-    val generalAvg = avgUdf(None, 0.001f)
-    val general = leaves
-      .groupBy(col("route_type"), col("route_section"), col("time_slot_id"),
-        col("event_type"))
-      .agg(cellStructs.as("cs"))
-      .withColumn("a", generalAvg(col("cs")))
-      .select(col("route_type"), col("route_section"), col("time_slot_id"),
-        col("event_type"), col("a._1").as("sample_size"), col("a._2").as("points"))
-
-    // 3. per (route_type, event_type) fallback pool
-    val pool = leaves
-      .groupBy(col("route_type"), col("event_type"))
-      .agg(cellStructs.as("cs"))
-      .withColumn("a", generalAvg(col("cs")))
-      .select(col("route_type"), col("event_type"),
-        col("a._1").as("pool_n"), col("a._2").as("pool_points"))
-
-    // 4. global fallback: every leaf pre-simplified(0.01), then averaged
-    val superAvg = avgUdf(Some(0.01f), 0.001f)
-    val globalRow = leaves
-      .groupBy()
-      .agg(cellStructs.as("cs"))
-      .withColumn("a", superAvg(col("cs")))
-      .select(col("a._1").as("global_n"), col("a._2").as("global_points"))
+    // 2. General per cell; 3. per (route_type, event_type) fallback pool;
+    // 4. global fallback over every leaf pre-simplified(0.01)
+    val general = leaves.groupBy(l => (l.routeType, l.section, l.slot, l.event))
+      .view.mapValues(averageLeaves(_, None)).toMap
+    val pool = leaves.groupBy(l => (l.routeType, l.event))
+      .view.mapValues(averageLeaves(_, None)).toMap
+    val global = if (leaves.isEmpty) None else Some(averageLeaves(leaves, Some(0.01f)))
 
     // full key grid over the reference's 11 route types (`default_curves.rs:
     // 46-58`; Coach/Air/Taxi carry their canonical extended GTFS codes) plus
     // any observed code outside that list (our schema keeps raw ints where
     // the reference's gtfs parser folds extended codes into the enum)
-    val sections = Seq(RouteSection.Beginning, RouteSection.Middle, RouteSection.End)
-      .toDF("route_section")
-    val slots = TimeSlot.Slots.map(_.id).toDF("time_slot_id")
-    val eventTypes = EventType.Types.toDF("event_type")
-    val referenceTypes = Seq(0, 1, 2, 3, 4, 5, 6, 7, 200, 1100, 1500)
-      .toDF("route_type")
-    val grid = leaves.select("route_type")
-      .union(referenceTypes).distinct()
-      .crossJoin(broadcast(sections))
-      .crossJoin(broadcast(slots))
-      .crossJoin(broadcast(eventTypes))
+    val routeTypes = (Seq(0, 1, 2, 3, 4, 5, 6, 7, 200, 1100, 1500) ++
+      leaves.map(_.routeType)).distinct
+    val rows = for {
+      (superN, superPoints) <- global.toSeq
+      routeType <- routeTypes
+      section <- Seq(RouteSection.Beginning, RouteSection.Middle, RouteSection.End)
+      slot <- TimeSlot.Slots.map(_.id)
+      event <- EventType.Types
+    } yield {
+      val (precision, (n, points)) = general.get((routeType, section, slot, event))
+        .map(PrecisionType.General -> _)
+        .orElse(pool.get((routeType, event)).map(PrecisionType.FallbackGeneral -> _))
+        .getOrElse(PrecisionType.SuperGeneral -> (superN, superPoints))
+      DefaultCurveRow(routeType, section, slot, event, precision, n, points)
+    }
+    spark.createDataFrame(rows)
+  }
 
-    grid
-      .join(general, Seq("route_type", "route_section", "time_slot_id", "event_type"), "left")
-      .join(broadcast(pool), Seq("route_type", "event_type"), "left")
-      .crossJoin(broadcast(globalRow))
-      .select(col("route_type"), col("route_section"), col("time_slot_id"), col("event_type"),
-        when(col("points").isNotNull, lit(PrecisionType.General))
-          .when(col("pool_points").isNotNull, lit(PrecisionType.FallbackGeneral))
-          .otherwise(lit(PrecisionType.SuperGeneral)).as("precision_type"),
-        coalesce(col("sample_size"), col("pool_n"), col("global_n")).as("sample_size"),
-        coalesce(col("points"), col("pool_points"), col("global_points")).as("points"))
+  /** Curve averaging over a pool of leaves in canonical order: reference
+    * CurveData::average (`src/types/curve_data.rs:21-43` — sample_size =
+    * Σ/len, integer div) followed by the cascade's post-average simplify. */
+  private def averageLeaves(pool: Seq[DefaultLeaf], preSimplifyEps: Option[Float])
+  : (Int, Seq[CurvePoint]) = {
+    val curves = pool.map { l =>
+      val c = Curve(l.xs.zip(l.ys).toVector)
+      preSimplifyEps.fold(c)(c.simplify)
+    }
+    val avg = Curve.average(curves).simplify(0.001f)
+    (pool.map(_.sampleSize).sum / pool.length, avg.points.map(p => CurvePoint(p._1, p._2)))
+  }
+}
+
+/** One collected default-curve leaf, its points as primitive arrays. */
+private final case class DefaultLeaf(routeType: Int, section: Int, slot: Int, event: Int,
+                                     sampleSize: Int, xs: Array[Float], ys: Array[Float])
+
+private object DefaultLeaf {
+  /** Lexicographic on (sample_size, (x, y) points), shorter point list
+    * first on a common prefix; floats compare in their total order. */
+  def canonicalLt(a: DefaultLeaf, b: DefaultLeaf): Boolean = {
+    var c = Integer.compare(a.sampleSize, b.sampleSize)
+    var i = 0
+    val n = math.min(a.xs.length, b.xs.length)
+    while (c == 0 && i < n) {
+      c = java.lang.Float.compare(a.xs(i), b.xs(i))
+      if (c == 0) c = java.lang.Float.compare(a.ys(i), b.ys(i))
+      i += 1
+    }
+    if (c == 0) c = Integer.compare(a.xs.length, b.xs.length)
+    c < 0
   }
 }

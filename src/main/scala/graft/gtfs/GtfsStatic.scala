@@ -109,36 +109,54 @@ object GtfsStatic {
         abs(xxhash64(col("route_id"), col("stop_seq_key"))).as("route_variant"))
   }
 
-  /** Which service_ids run on a given date (reference `trips_for_date` via
-    * gtfs-structures; calendar weekday bit + date range, then
-    * calendar_dates exceptions: 1 = added, 2 = removed). */
-  def serviceIdsForDate(schedule: Schedule, date: java.time.LocalDate): DataFrame = {
-    val d8 = date.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE)
-    val weekdayCol = date.getDayOfWeek match {
-      case java.time.DayOfWeek.MONDAY => "monday"
-      case java.time.DayOfWeek.TUESDAY => "tuesday"
-      case java.time.DayOfWeek.WEDNESDAY => "wednesday"
-      case java.time.DayOfWeek.THURSDAY => "thursday"
-      case java.time.DayOfWeek.FRIDAY => "friday"
-      case java.time.DayOfWeek.SATURDAY => "saturday"
-      case java.time.DayOfWeek.SUNDAY => "sunday"
+  /** Which services run on which days of [from, from+days): one
+    * (service_id, service_date) row per running service and day (reference
+    * `trips_for_date` via gtfs-structures, called per day by
+    * `src/importer/scheduled_predictions_importer.rs:115-139`; here one
+    * relation covers the whole horizon). A day runs a service when its `calendar.txt` weekday bit is set
+    * and the day lies within [start_date, end_date], or when
+    * `calendar_dates.txt` adds it (exception_type 1); a removal
+    * (exception_type 2) wins over both. The days are a local relation, so
+    * the plan has the same shape for any horizon length; `days <= 0` gives
+    * an empty relation. */
+  def serviceDays(schedule: Schedule, from: java.time.LocalDate, days: Int): DataFrame = {
+    val spark = schedule.calendar.sparkSession
+    val daySchema = StructType(Seq(
+      StructField("service_date", DateType, nullable = false),
+      StructField("d8", StringType, nullable = false),
+      StructField("iso_weekday", IntegerType, nullable = false)))
+    val dayRows = (0 until days).map { i =>
+      val day = from.plusDays(i)
+      org.apache.spark.sql.Row(java.sql.Date.valueOf(day),
+        day.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE),
+        day.getDayOfWeek.getValue)
     }
+    val horizon = broadcast(spark.createDataFrame(
+      java.util.Arrays.asList(dayRows: _*), daySchema))
+    // ISO weekday 1 = Monday … 7 = Sunday indexes the calendar's bits
+    val weekdayBit = element_at(array(Seq("monday", "tuesday", "wednesday",
+      "thursday", "friday", "saturday", "sunday").map(col): _*), col("iso_weekday"))
     val base = schedule.calendar
-      .filter(col(weekdayCol) === 1 &&
-        col("start_date") <= d8 && col("end_date") >= d8)
-      .select("service_id")
-    val added = schedule.calendarDates
-      .filter(col("date") === d8 && col("exception_type") === 1)
-      .select("service_id")
-    val removed = schedule.calendarDates
-      .filter(col("date") === d8 && col("exception_type") === 2)
-      .select("service_id")
-    base.union(added).distinct()
-      .join(removed, Seq("service_id"), "left_anti")
+      .join(horizon, weekdayBit === 1 &&
+        col("start_date") <= col("d8") && col("end_date") >= col("d8"))
+      .select(col("service_id"), col("service_date"), lit(false).as("removed"))
+    val exceptions = schedule.calendarDates
+      .filter(col("exception_type").isin(1, 2))
+      .join(horizon, col("date") === col("d8"))
+      .select(col("service_id"), col("service_date"),
+        (col("exception_type") === 2).as("removed"))
+    base.unionByName(exceptions)
+      .groupBy("service_id", "service_date")
+      .agg(max(col("removed")).as("removed"))
+      .filter(!col("removed"))
+      .select("service_id", "service_date")
   }
 
-  /** Trips running on a date (used by scheduled predictions,
-    * `src/importer/scheduled_predictions_importer.rs:115-139`). */
+  /** The service_ids running on one date: [[serviceDays]] for one day. */
+  def serviceIdsForDate(schedule: Schedule, date: java.time.LocalDate): DataFrame =
+    serviceDays(schedule, date, 1).select("service_id")
+
+  /** Trips running on a date (used by the visual schedule). */
   def tripsForDate(schedule: Schedule, date: java.time.LocalDate): DataFrame =
     schedule.trips.join(broadcast(serviceIdsForDate(schedule, date)), Seq("service_id"), "left_semi")
 }

@@ -29,11 +29,10 @@ object JourneyData {
                   headsign: String, routeShortName: String, routeType: Int,
                   stopId: String, departureSecsOfDay: Int,
                   date: java.time.LocalDate): DataFrame = {
-    val candidateDays = Seq(-1, 0, 1).map(date.plusDays(_))
-    val active = candidateDays.map { day =>
-      GtfsStatic.tripsForDate(schedule, day)
-        .withColumn("service_day", lit(java.sql.Date.valueOf(day)))
-    }.reduce(_ unionByName _)
+    val active = schedule.trips
+      .join(broadcast(GtfsStatic.serviceDays(schedule, date.minusDays(1), 3)),
+        Seq("service_id"))
+      .withColumnRenamed("service_date", "service_day")
     active
       .filter(col("trip_headsign") === headsign)
       .join(broadcast(schedule.routes.filter(

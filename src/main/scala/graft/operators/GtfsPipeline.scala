@@ -482,7 +482,7 @@ object GtfsPipeline {
 
     // §3.3 scheduled-prediction REQUEST generation over a horizon that
     // crosses a weekend AND the 2024-03-18 calendar exception (wk removed,
-    // we added) — hash-checks tripsForDate (weekday bits, date ranges,
+    // we added) — hash-checks serviceDays (weekday bits, date ranges,
     // calendar_dates add/remove), the single trip_start_time identity
     // (first stop's departure), dense stop_index/stop_count, and >24h
     // event instants against a DuckDB reimplementation over the GTFS CSVs.

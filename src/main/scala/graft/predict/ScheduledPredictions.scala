@@ -13,23 +13,23 @@ import java.time.LocalDate
   * (these land at SemiSpecific or below), and upsert keyed like records.
   *
   * The reference trickles this out in >=6-min / >=1000-trip batches against
-  * MySQL; set-oriented Spark does the whole horizon in one job, and the
+  * MySQL; here the whole horizon is ONE plan: trips join the horizon's
+  * (service_id, service_date) relation ([[GtfsStatic.serviceDays]]) once,
+  * so the number of Spark jobs does not grow with the number of days. The
   * A12 watermark (`:304-336` — resume from the latest Schedule-origin
   * prediction) becomes a simple max() + filter.
   */
 object ScheduledPredictions {
 
   /** Build basis-less requests for all trips active on [from, from+days).
-    * One request row per (trip, service day, stop, event type). */
+    * One request row per (trip, service day, stop, event type); an empty
+    * horizon (`days <= 0`) gives an empty relation. */
   def requests(spark: SparkSession, schedule: GtfsStatic.Schedule,
                from: LocalDate, days: Int): DataFrame = {
     val stops = graft.analyse.DelayAnalysis.scheduleStops(schedule)
-    val perDay = (0 until days).map { i =>
-      val day = from.plusDays(i)
-      GtfsStatic.tripsForDate(schedule, day)
-        .withColumn("trip_start_date", lit(java.sql.Date.valueOf(day)))
-    }
-    val trips = perDay.reduce(_ unionByName _)
+    val trips = schedule.trips
+      .join(broadcast(GtfsStatic.serviceDays(schedule, from, days)), Seq("service_id"))
+      .withColumnRenamed("service_date", "trip_start_date")
       .join(schedule.tripsWithVariant.select("trip_id", "route_variant"), Seq("trip_id"))
     // ONE vehicle identity per trip run: trip_start_time is the first stop's
     // scheduled DEPARTURE for both event branches (the GTFS-RT trip

@@ -127,4 +127,11 @@ class DelayAnalysisSpec extends SparkSpec {
       .select("sample_size").collect().map(_.getInt(0)).toSet
     assert(generalSizes == Set(40))
   }
+
+  test("default curves: no records give an empty defaults table") {
+    val none = DelayAnalysis.defaultCurves(records.limit(0), schedule, schedule.routes)
+    assert(none.collect().isEmpty)
+    assert(none.columns.toSeq == Seq("route_type", "route_section", "time_slot_id",
+      "event_type", "precision_type", "sample_size", "points"))
+  }
 }

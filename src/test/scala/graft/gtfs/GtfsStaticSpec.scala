@@ -71,4 +71,35 @@ class GtfsStaticSpec extends SparkSpec {
       .select("trip_id").collect()
     assert(out.isEmpty)
   }
+
+  test("serviceDays over a horizon equals the union of its single days") {
+    import org.apache.spark.sql.functions._
+    // the fixture's `we` service ends on Sunday 2024-03-17 here, so the
+    // horizon Thu 14 .. Wed 20 crosses a calendar.txt end date, the
+    // weekday/weekend boundary both ways, and Mon 18's two exceptions
+    // (wk removed, we added — after we's end date)
+    val cut = schedule.copy(calendar = schedule.calendar.withColumn("end_date",
+      when(col("service_id") === "we", lit("20240317")).otherwise(col("end_date"))))
+    val from = LocalDate.of(2024, 3, 14)
+    def pairs(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("service_id"), col("service_date").cast("string"))
+      .collect().map(r => (r.getString(0), r.getString(1))).toSet
+    val horizon = pairs(GtfsStatic.serviceDays(cut, from, 7))
+    val perDay = (0 until 7).flatMap(i => pairs(GtfsStatic.serviceDays(cut, from.plusDays(i), 1))).toSet
+    assert(horizon == perDay)
+    val byDay = horizon.groupMap(_._2)(_._1)
+    assert(byDay("2024-03-15") == Set("wk", "all"))
+    assert(byDay("2024-03-16") == Set("we", "all"))
+    assert(byDay("2024-03-18") == Set("we", "all"))
+    assert(byDay("2024-03-19") == Set("wk", "all"))
+    assert(horizon.size == 14)
+    assert(GtfsStatic.serviceDays(cut, from, 0).collect().isEmpty)
+    // the unmodified fixture's own end date: every service ends 2024-12-31
+    val yearEnd = LocalDate.of(2024, 12, 30)
+    val lastDays = pairs(GtfsStatic.serviceDays(schedule, yearEnd, 3))
+    assert(lastDays == (0 until 3).flatMap(i =>
+      pairs(GtfsStatic.serviceDays(schedule, yearEnd.plusDays(i), 1))).toSet)
+    assert(lastDays == Set(("wk", "2024-12-30"), ("all", "2024-12-30"),
+      ("wk", "2024-12-31"), ("all", "2024-12-31")))
+  }
 }

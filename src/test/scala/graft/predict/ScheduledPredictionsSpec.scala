@@ -69,4 +69,33 @@ class ScheduledPredictionsSpec extends SparkSpec {
       LocalDate.of(2024, 3, 15), days = 2, resumeFrom = wm)
     assert(resumed.count() == 0) // nothing newer than the watermark
   }
+
+  test("an empty horizon gives an empty requests relation") {
+    val reqs = ScheduledPredictions.requests(spark, schedule, LocalDate.of(2024, 3, 15), 0)
+    assert(reqs.collect().isEmpty)
+    assert(reqs.columns.contains("event_instant"))
+  }
+
+  test("requests run one plan per horizon: Spark jobs do not grow with days") {
+    // job counts are exact and host-independent; a per-day plan would
+    // add jobs for every extra day of the horizon
+    def jobs(days: Int): Int = {
+      val sc = spark.sparkContext
+      val started = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          started.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(sc) // earlier specs' events stay out
+      sc.addSparkListener(listener)
+      try {
+        ScheduledPredictions.requests(spark, schedule, LocalDate.of(2024, 3, 15), days).collect()
+        org.apache.spark.ListenerBusDrain(sc)
+        started.get()
+      } finally sc.removeSparkListener(listener)
+    }
+    val oneDay = jobs(1)
+    assert(oneDay > 0)
+    assert(jobs(7) == oneDay)
+  }
 }
