@@ -76,7 +76,9 @@ object Graft {
   }
 
   /** `predict single`: build the interactive point-lookup for one route
-    * (partition-pruned statistics load; reference `run_single`). */
+    * (partition-pruned statistics load; reference `run_single`). Loading
+    * the statistics runs no Spark job (their schemas are declared, see
+    * [[StatisticsIO]]); the jobs are the lookup's own collects. */
   def predictorFor(spark: SparkSession, statsDir: String, scheduleDir: String,
                    routeId: String): PointPredictor = {
     val stats = StatisticsIO.load(spark, statsDir)

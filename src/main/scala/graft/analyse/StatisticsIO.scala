@@ -1,7 +1,7 @@
 package graft.analyse
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** S7: the statistics store. The reference serializes one nested
   * `DelayStatistics` tree to MessagePack (`all_curves.exp` /
@@ -15,6 +15,15 @@ import org.apache.spark.sql.functions._
   * The reference's statistics merge (`src/main.rs:295-318`: specific curves
   * from `all_curves.exp` + general curves from `default_curves.exp`) becomes
   * two independent table reads — no merge step needed.
+  *
+  * The table schemas are the row case classes ([[GeneralCurveRow]],
+  * [[CurveSetRow]], [[DefaultCurveRow]]; `route_id`, the partition column,
+  * listed last), declared on read rather than inferred from the files:
+  * `route_id` is a string whatever its values look like (routes "07" and
+  * "7" stay two routes), a table written from zero rows loads as empty,
+  * and loading submits no Spark job (partition directories are listed on
+  * the driver up to `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  * routes).
   */
 object StatisticsIO {
 
@@ -37,10 +46,18 @@ object StatisticsIO {
   final case class Statistics(general: DataFrame, curveSets: DataFrame,
                               defaults: DataFrame)
 
-  def load(spark: SparkSession, baseDir: String): Statistics = Statistics(
-    general = spark.read.parquet(s"$baseDir/$GeneralDir"),
-    curveSets = spark.read.parquet(s"$baseDir/$CurveSetsDir"),
-    defaults = spark.read.parquet(s"$baseDir/$DefaultDir"))
+  def load(spark: SparkSession, baseDir: String): Statistics = {
+    def read(dir: String, schema: StructType) =
+      spark.read.schema(schema).parquet(s"$baseDir/$dir")
+    // a partitioned read lists route_id last; declaring it there keeps a
+    // table without partition directories (zero rows) in the same layout
+    def routeLast(schema: StructType) =
+      StructType(schema.filterNot(_.name == "route_id") :+ schema("route_id"))
+    Statistics(
+      general = read(GeneralDir, routeLast(Encoders.product[GeneralCurveRow].schema)),
+      curveSets = read(CurveSetsDir, routeLast(Encoders.product[CurveSetRow].schema)),
+      defaults = read(DefaultDir, Encoders.product[DefaultCurveRow].schema))
+  }
 
   /** Run the whole analyse pipeline and persist it (the `analyse
     * compute-curves --all` entry point, SURVEY.md §3.2). */

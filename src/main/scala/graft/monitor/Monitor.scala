@@ -71,7 +71,10 @@ object Monitor {
     *  - F5: predictions overlapping [minTime, maxTime)
     *  - J6: metadata join for route_short_name / route_type / headsign
     *  - F6: drop Schedule-origin rows shadowed by a Realtime row for the
-    *    same (route_id, trip_start_date, trip_start_time)
+    *    same vehicle (route_id, trip_start_date, trip_start_time): a
+    *    window over that vehicle key on the same windowed scan, so the
+    *    predictions are read once; rows with a null origin_type are
+    *    dropped, and a row with a null key column is never shadowed
     *  - F7: drop departures at a trip's final stop
     *  - W4: sort by the median predicted departure
     *
@@ -87,14 +90,15 @@ object Monitor {
     val windowed = predictions
       .filter(col("stop_id").isin(stopIds: _*))
       .filter(col("prediction_min") < lit(maxTime) && col("prediction_max") > lit(minTime))
-    // F6: Schedule-origin rows with a Realtime shadow -> anti join
-    val realtimeVehicles = windowed
-      .filter(col("origin_type") === OriginType.Realtime)
-      .select(vehicleKey.map(col): _*).distinct()
-    val deduped = windowed.filter(col("origin_type") === OriginType.Realtime)
-      .unionByName(
-        windowed.filter(col("origin_type") =!= OriginType.Realtime)
-          .join(realtimeVehicles, vehicleKey, "left_anti"))
+    // F6: a non-Realtime row is shadowed when its vehicle has a Realtime
+    // row on the board; a null key column never names a vehicle
+    val realtime = col("origin_type") === OriginType.Realtime
+    val shadowed = vehicleKey.map(col(_).isNotNull).reduce(_ && _) &&
+      coalesce(max(realtime).over(Window.partitionBy(vehicleKey.map(col): _*)), lit(false))
+    val deduped = windowed
+      .withColumn("shadowed", shadowed)
+      .filter(realtime || (col("origin_type").isNotNull && !col("shadowed")))
+      .drop("shadowed")
     // F7: final stops never "depart"
     val lastStops = stopTimes.groupBy("trip_id")
       .agg(max("stop_sequence").as("last_seq"))

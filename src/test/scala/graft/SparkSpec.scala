@@ -9,6 +9,25 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** The Spark jobs `body` submits, counted by a listener. Job counts are
+    * exact and host-independent, so specs pin them where a timing would
+    * be noise. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(sc) // earlier specs' events stay out
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+      started.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Recursive copy, used by the streamed-store crash specs to stash
     * and restore delta partitions around a compaction (reconstructing
     * the on-disk state of a specific crash interleaving). */

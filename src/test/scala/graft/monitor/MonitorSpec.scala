@@ -5,8 +5,11 @@ import graft.analyse.CurvePoint
 import graft.curves.{Curve, CurveBuilder}
 import graft.gtfs.GtfsStatic
 import graft.model.OriginType
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import java.sql.Timestamp
+import java.nio.file.Files
+import java.sql.{Date, Timestamp}
 
 class MonitorSpec extends SparkSpec {
 
@@ -59,6 +62,61 @@ class MonitorSpec extends SparkSpec {
     val enriched = board.collect().head
     assert(enriched.getAs[String]("route_short_name") == "4")
     assert(enriched.getAs[Int]("route_type") == 3)
+  }
+
+  test("F6 shadows by vehicle across stops; null origins drop, null keys never shadow") {
+    import spark.implicits._
+    def row(trip: String, route: String, stop: String, seq: Int, origin: Option[Int],
+            startSecs: Int, instant: String) = {
+      val at = Timestamp.valueOf(s"2024-03-15 $instant")
+      (trip, route, stop, seq, origin, Date.valueOf("2024-03-15"), startSecs,
+        at, at, at, curve((0f, 0f), (60f, 1f)))
+    }
+    val preds = Seq(
+      // one vehicle: Realtime at s1 shadows its Schedule row at s2
+      row("tA1", "rA", "s1", 1, Some(OriginType.Realtime), 8 * 3600, "08:01:00"),
+      row("tA1", "rA", "s2", 2, Some(OriginType.Schedule), 8 * 3600, "08:06:00"),
+      // a Schedule-only vehicle keeps its rows
+      row("tA2", "rA", "s1", 1, Some(OriginType.Schedule), 9 * 3600, "09:01:00"),
+      row("tA2", "rA", "s2", 2, Some(OriginType.Schedule), 9 * 3600, "09:06:00"),
+      // a null origin_type is neither Realtime nor shadowable: dropped
+      row("tA3", "rA", "s2", 2, None, 10 * 3600, "08:30:00"),
+      // null route_id: equal keys otherwise, but a null key names no vehicle
+      row("tB1", null, "s1", 1, Some(OriginType.Realtime), 12 * 3600, "08:40:00"),
+      row("tB2", null, "s1", 1, Some(OriginType.Schedule), 12 * 3600, "08:50:00"))
+      .toDF("trip_id", "route_id", "stop_id", "stop_sequence", "origin_type",
+        "trip_start_date", "trip_start_time", "event_instant", "prediction_min",
+        "prediction_max", "prediction_curve")
+      .withColumn("event_type", lit(2))
+    val board = Monitor.departureBoard(preds,
+      schedule.trips, schedule.routes, schedule.stopTimes,
+      stopIds = Seq("s1", "s2"),
+      minTime = Timestamp.valueOf("2024-03-15 08:00:00"),
+      maxTime = Timestamp.valueOf("2024-03-15 09:30:00"))
+    val rows = board.select("trip_id", "stop_id", "origin_type").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq
+    assert(rows == Seq(
+      ("tA1", "s1", OriginType.Realtime),
+      ("tB1", "s1", OriginType.Realtime),
+      ("tB2", "s1", OriginType.Schedule),
+      ("tA2", "s1", OriginType.Schedule),
+      ("tA2", "s2", OriginType.Schedule)))
+  }
+
+  test("the board scans a parquet predictions table once") {
+    val path = Files.createTempDirectory("board_preds").resolve("p").toString
+    predictions.write.parquet(path)
+    val board = Monitor.departureBoard(spark.read.parquet(path),
+      schedule.trips, schedule.routes, schedule.stopTimes,
+      stopIds = Seq("s2", "s8"),
+      minTime = Timestamp.valueOf("2024-03-15 08:00:00"),
+      maxTime = Timestamp.valueOf("2024-03-15 09:30:00"))
+    assert(board.select("trip_id").collect().map(_.getString(0)).toSeq == Seq("tA1", "tA2"))
+    val scans = new AdaptiveSparkPlanHelper {}.collect(board.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.endsWith(path)) => s
+    }
+    assert(scans.size == 1, board.queryExecution.executedPlan)
   }
 
   test("quantile markers and curve UDFs match the pure curve math") {

@@ -79,21 +79,8 @@ class ScheduledPredictionsSpec extends SparkSpec {
   test("requests run one plan per horizon: Spark jobs do not grow with days") {
     // job counts are exact and host-independent; a per-day plan would
     // add jobs for every extra day of the horizon
-    def jobs(days: Int): Int = {
-      val sc = spark.sparkContext
-      val started = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          started.incrementAndGet()
-      }
-      org.apache.spark.ListenerBusDrain(sc) // earlier specs' events stay out
-      sc.addSparkListener(listener)
-      try {
-        ScheduledPredictions.requests(spark, schedule, LocalDate.of(2024, 3, 15), days).collect()
-        org.apache.spark.ListenerBusDrain(sc)
-        started.get()
-      } finally sc.removeSparkListener(listener)
-    }
+    def jobs(days: Int): Int = jobsDuring(
+      ScheduledPredictions.requests(spark, schedule, LocalDate.of(2024, 3, 15), days).collect())
     val oneDay = jobs(1)
     assert(oneDay > 0)
     assert(jobs(7) == oneDay)
