@@ -29,14 +29,4 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     all.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
-
-  /** One-time persisted-store initialization for the probe-only
-    * registry faces (currently the q138 BM25 store). A deployment
-    * writes these artifacts once per corpus snapshot and every query
-    * batch probes them, so Bench runs this BEFORE the timed loop —
-    * attributing the build to the probe query would misprice the
-    * deployment shape. Idempotent: each store is keyed by corpus
-    * identity and short-circuits to one marker read when present. */
-  def initStores(spark: SparkSession, sfDir: String): Unit =
-    graft.streaming.DocStream.initBm25Store(spark, sfDir)
 }

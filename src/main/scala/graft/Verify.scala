@@ -1,31 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCores)
     new java.io.File(outDir).mkdirs()
-    // dev loop (mirrors Bench): SPARK_GRAFT_ONLY=q82,q83 dumps just those
-    // queries; the driver never sets it, so the gate still runs everything
+    // dev loop: SPARK_GRAFT_ONLY=q82,q83 dumps just those queries; unset,
+    // the gate runs everything
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val picked = only.fold(SparkEntry.queries) { sel =>
       SparkEntry.queries.filter { case (n, _) => sel.exists(n.startsWith) }
     }
     picked.foreach { case (name, fn) =>
+      // a query that throws must leave NO output: a stale dir from an
+      // earlier run in the same out dir would otherwise pass the gate
+      val dst = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      dst.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dst, true)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+        .parquet(dst.toString)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

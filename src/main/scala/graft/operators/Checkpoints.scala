@@ -18,9 +18,10 @@ import org.apache.spark.sql.DataFrame
   * This helper picks the strategy from the session: reliable `checkpoint`
   * when a checkpoint dir is set, `localCheckpoint` otherwise. Both are
   * eager, so callers may `unpersist` upstream caches immediately after.
-  * The fault-tolerance claim is EXERCISED by `graft.FaultBench` (r8):
-  * an executor SIGKILLed mid-iteration on a local-cluster master, the
-  * worker relaunches it, components complete correctly (PERF.md r8).
+  * The fault-tolerance claim was measured once, not gated: an executor
+  * SIGKILLed mid-iteration on a local-cluster master was relaunched by
+  * its worker and components completed correctly (PERF.md r8). No
+  * automated check exercises executor loss.
   *
   * Storage discipline: Spark never deletes reliable checkpoint data on its
   * own (the ContextCleaner only does so under
@@ -32,7 +33,7 @@ import org.apache.spark.sql.DataFrame
   * checkpoint is consumed lazily inside the returned plan and so cannot be
   * deleted eagerly) REGISTER their directory instead: a runner that knows
   * the consuming action has completed calls [[releaseOneShots]] — the
-  * Bench/Verify registry runners do after every query — so directories
+  * `Verify` registry runner does after every query — so directories
   * never accumulate across invocations (r7 ADVICE task #2). Streaming
   * sinks must NOT use the global sweep (their micro-batch may run
   * concurrently with a query whose one-shots are still live); they wrap
@@ -69,8 +70,8 @@ object Checkpoints {
   /** Delete every one-shot checkpoint directory [[truncate]] has
     * registered since the last release. Call ONLY after all actions
     * consuming the returned plans have completed — a plan holding a
-    * released checkpoint cannot be re-executed. The Bench/Verify
-    * registry runners call this after each query's action; long-running
+    * released checkpoint cannot be re-executed. The `Verify` registry
+    * runner calls this after each query's action; long-running
     * deployments should call it at their own unit-of-work boundaries
     * (after a sink commits, after a report materializes). */
   def releaseOneShots(): Unit = {

@@ -597,7 +597,7 @@ object CurationQueries {
     * df·factor > N — factor 10 is the classic absolute stopword rule)
     * so no query term's posting list is corpus-sized; the knob is the
     * bound on scored-posting volume at scale (Bm25Spec pins the cut on
-    * an open-vocabulary fixture; RetrievalBench measures it). The
+    * an open-vocabulary fixture; PERF.md r10 measured the volume). The
     * registered q126 leaves it OFF because the synthetic corpus's
     * CLOSED 31-token vocabulary (median df = 0.78·N) would empty every
     * query under it — vocabulary shape decides the knob, the q56/q80
@@ -743,11 +743,10 @@ object CurationQueries {
       .select(col("query_id"), col("e.df").as("df"), col("e.token").as("token"))
   }
 
-  /** The absolute stopword prune, in ONE place for its three callers
-    * ([[bm25QueryTerms]], [[bm25ScoreIndexed]], RetrievalBench's
-    * volume probe): keep `rel` rows (which must carry `df`) whose
-    * df·factor ≤ the index's corpus doc count — one broadcast row of
-    * totals, map-side. `factor` ≤ 0 disables. */
+  /** The absolute stopword prune, in ONE place for its two callers
+    * ([[bm25QueryTerms]], [[bm25ScoreIndexed]]): keep `rel` rows (which
+    * must carry `df`) whose df·factor ≤ the index's corpus doc count —
+    * one broadcast row of totals, map-side. `factor` ≤ 0 disables. */
   private[graft] def dfPruned(rel: DataFrame, factor: Long,
                               totals: DataFrame): DataFrame =
     if (factor <= 0) rel

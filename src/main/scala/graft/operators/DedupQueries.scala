@@ -382,7 +382,8 @@ object DedupQueries {
     // pre-hash each shingle STRING once; the 16 signature permutations
     // re-hash the resulting long (cheap fixed-width input) — measured 66 s
     // -> 42 s on a 100k-doc corpus vs seeding the string hash 16 times
-    // (DocBench; the remainder is the inherent pair materialization)
+    // (PERF.md near-dup battery throughput; the remainder is the inherent
+    // pair materialization)
     val sigs = docs
       .filter(size(t) >= 3)
       .select(col("doc_id"), explode(shingles).as("sh"))
@@ -898,9 +899,9 @@ object DedupQueries {
     * source block (tiny alphabets, heavily repetitive corpora), even the
     * "rarest" prefix shingles are shared by large doc sets and the
     * candidate join degenerates toward all-pairs. Counter it by raising
-    * `shingleLen` (universe grows exponentially in it) — DocBench probes
-    * a 100k-doc digit-heavy corpus with shingleLen=8 for exactly this
-    * reason. */
+    * `shingleLen` (universe grows exponentially in it): a 100k-doc
+    * digit-heavy corpus needs shingleLen=8 (PERF.md near-dup battery
+    * throughput). */
   def charShinglePrefixJoin(documents: DataFrame, threshold: Double = 0.5,
                             shingleLen: Int = 3, stride: Int = 8): DataFrame =
     prefixSimilarityJoin(documents.select(col("doc_id"), col("source"),
@@ -1107,8 +1108,8 @@ object DedupQueries {
   // checkpoints this replaced is bounded checkpoint STORAGE for
   // registry-lifetime RESIDENCY; deployments where that residency is
   // wrong (corpus rotation, memory-tight executors) bound it at the
-  // snapshot boundary with [[clearSharedPairCache]], and the bench's
-  // SPARK_GRAFT_ISOLATE=1 mode measures every query at zero residency.
+  // snapshot boundary with [[clearSharedPairCache]], which also brings
+  // every query back to its standalone, zero-residency cost.
   private[operators] val MaxSharedPairEntries = 24
   private final case class SharedEntry(
     plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
@@ -1386,8 +1387,8 @@ object DedupQueries {
     * Heavy-posting-list guard: the per-list pair generator is quadratic
     * INSIDE ONE TASK, so a hot element that survives into prefixes (tiny
     * alphabets, boilerplate-heavy corpora — the degeneracy the
-    * precondition note describes, and the exact corpus that previously
-    * killed a DocBench run at shingleLen=3) would wall a single core.
+    * precondition note describes: a digit-heavy corpus at shingleLen=3,
+    * PERF.md r6) would wall a single core.
     * Lists with ≥ `heavyListThreshold` prefix entries are counted up
     * front (heavy keys are few by definition → broadcastable, same
     * argument as [[minhashCandidates]]'s bucket guard) and routed through

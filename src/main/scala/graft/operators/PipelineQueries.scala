@@ -846,8 +846,8 @@ object PipelineQueries {
     * plan, so a 100 TB corpus with a million-document duplicate blob
     * costs O(bands·10⁶) verifications, not 5·10¹¹ pairs. */
   /** The REGISTERED q128/q132 band layout: 8 bands × 4 rows over 32
-    * token-minhash permutations — the ClusterRecallProbe sweep's
-    * frontier point (doc recall 0.833 vs 4×4's 0.782 at the same warm
+    * token-minhash permutations — the band-layout sweep's frontier point
+    * (PERF.md r10; doc recall 0.833 vs 4×4's 0.782 at the same warm
     * wall; widening bands at CONSTANT width preserves bucket purity,
     * which the 8×2 sweep point showed is what chain candidates need).
     * One definition so the Spark defaults and the oracle CTEs cannot

@@ -114,7 +114,7 @@ object UpsertSink {
     // it three times (emptiness, touched partitions, the merge itself),
     // and an un-materialized batch re-executes its full upstream plan per
     // pass — for the predictions stream that is the whole realtime
-    // ladder. Same-session A/B (StreamBench r7, 2000 vehicles, 5 s
+    // ladder. Same-session A/B (PERF.md r7, 2000 vehicles, 5 s
     // trigger): predictions batch median 9.8 s before, 6.0/7.2 s across
     // two runs after. Micro-batch-sized, so the materialization itself
     // is cheap.
@@ -122,9 +122,9 @@ object UpsertSink {
     // An empty micro-batch must write NOTHING: overwriting with an empty
     // frame would still create the table directory without any parquet
     // footer, and the next batch's read of that dir throws
-    // UNABLE_TO_INFER_SCHEMA and kills the stream (found by StreamBench,
-    // r7 — a quiet first trigger interval was enough to break the
-    // automatic mode permanently).
+    // UNABLE_TO_INFER_SCHEMA and kills the stream (a quiet first trigger
+    // interval was enough to break the automatic mode permanently;
+    // UpsertSinkSpec pins it).
     if (b.isEmpty) { ckpt.release(); return }
     // ...and existence must mean READABLE data, not just a directory: a
     // crash between mkdir and commit leaves the footer-less state too

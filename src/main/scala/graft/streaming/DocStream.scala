@@ -153,8 +153,8 @@ object DocStream {
     * that many uncompacted dfd deltas accumulate, the sink runs
     * [[compactBm25Index]] before returning — between batches of the
     * single-writer stream, so the quiet-boundary contract holds with no
-    * manual compaction call (steady-state measured over 500+ batches in
-    * Bm25StoreBench; load wall and file count stay bounded). */
+    * manual compaction call (steady state measured once over 500+
+    * batches, PERF.md r10: load wall and file count stay bounded). */
   def bm25IndexSink(path: String, autoCompactEvery: Int = 0)
   : (DataFrame, Long) => Unit = (batch, batchId) => {
     graft.operators.Checkpoints.releasingScoped {

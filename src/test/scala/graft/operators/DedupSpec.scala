@@ -309,7 +309,7 @@ class DedupSpec extends SparkSpec {
 
   test("heavy posting lists route through the salted path with identical output") {
     import spark.implicits._
-    // THE corpus that previously killed a DocBench run: digit-heavy text
+    // THE corpus that once walled a single core: digit-heavy text
     // with 3-char shingles — the distinct-shingle universe is tiny, every
     // shingle is hot, every posting list is block-sized. The guard must
     // route those lists through the salted scatter join and still produce

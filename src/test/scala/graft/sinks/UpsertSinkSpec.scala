@@ -120,7 +120,7 @@ class UpsertSinkSpec extends SparkSpec {
         .withColumn("trip_start_time", lit(0))
     // empty FIRST batch: must create nothing (an empty overwrite used to
     // leave a footer-less dir that crashed the next batch's read and with
-    // it the whole automatic-mode stream — found by StreamBench, r7)
+    // it the whole automatic-mode stream)
     UpsertSink.mergeIntoPartitionedRecords(spark, batch(Nil), path)
     assert(!new java.io.File(path).exists(), "empty batch wrote a directory")
     // a parquet-less dir from a crash mid-commit must read as absent

@@ -17,7 +17,7 @@ import java.sql.Timestamp
   * cadence) CONCURRENTLY. Every surface must end exactly as its
   * isolated twin would: the co-residency shares one scheduler and one
   * shuffle service but no state, so interference may cost latency
-  * (measured in StreamBench's composed mode), never correctness. */
+  * (measured once, PERF.md r10), never correctness. */
 class ComposedStreamSpec extends SparkSpec {
 
   private def relRows(df: DataFrame): Seq[String] =

@@ -5,7 +5,8 @@ Usage: python3 tools/check_oracle.py <sfDir> <outDir>
   1. expects `sbt "runMain graft.Verify <sfDir> <outDir>"` to have run
   2. loads each <outDir>/<name> parquet (Spark result)
   3. runs <outDir>/oracle_sql.json's SQL in DuckDB over <sfDir> tables
-  4. compares: row count, column names (sorted), and cell values.
+  4. compares: row count, column names (sorted), and cell values;
+     an oracle_sql.json key with no output dir counts as a failure.
 
 Not part of the shipped library — dev tooling only.
 """
@@ -39,6 +40,11 @@ def main():
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_noop = 0
+    # Verify writes nothing for a query that throws, so an oracle key
+    # with no output dir is a failed query, not a skipped one
+    for name in sorted(k for k in oracle if not os.path.isdir(os.path.join(out_dir, k))):
+        print(f"✗ {name}: missing (no output dir)")
+        n_fail += 1
     for name in sorted(os.listdir(out_dir)):
         path = os.path.join(out_dir, name)
         if not os.path.isdir(path):
