@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`tools/check_oracle.py`).
+  * Exits 1, naming the failed queries on stderr, when any query throws:
+  * the rows-only queries have no oracle key, so the compare alone
+  * cannot see them fail. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -14,20 +17,24 @@ object Verify {
     val picked = only.fold(SparkEntry.queries) { sel =>
       SparkEntry.queries.filter { case (n, _) => sel.exists(n.startsWith) }
     }
-    picked.foreach { case (name, fn) =>
+    val failed = picked.toSeq.filterNot { case (name, fn) =>
       // a query that throws must leave NO output: a stale dir from an
       // earlier run in the same out dir would otherwise pass the gate
       val dst = new org.apache.hadoop.fs.Path(s"$outDir/$name")
       dst.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dst, true)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(dst.toString)
-      catch { case e: Throwable =>
+      val ok = try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(dst.toString)
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       }
       // parquet write committed → the query's one-shot checkpoints are
       // consumed; retire them (no-op without a checkpoint dir)
       graft.operators.Checkpoints.releaseOneShots()
-    }
+      ok
+    }.map(_._1)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -43,6 +50,12 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    println(s"[verify] shared relations: ${graft.operators.SharedRelations.hits} hits, " +
+      s"${graft.operators.SharedRelations.misses} misses")
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

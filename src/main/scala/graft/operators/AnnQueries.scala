@@ -375,7 +375,7 @@ object AnnQueries {
   private[operators] def knnJoinUnorderedShared(embeddings: DataFrame,
                                                 k: Int = 3,
                                                 blocks: Int = 8): DataFrame =
-    DedupQueries.memoSharedRelation("knnexact", embeddings, k, blocks) {
+    SharedRelations("knnexact", embeddings, k, blocks) {
       val pairs = scoredPairs(withNorms(embeddings), Seq.empty, blocks)
       rankedNeighboursUnordered(pairs.select(explode(array(
           struct(col("ida").as("vec_id"), col("idb").as("nb"), col("c")),
@@ -439,7 +439,7 @@ object AnnQueries {
   private[operators] def knnJoinLshPortableShared(embeddings: DataFrame,
                                                   k: Int, planes: Int,
                                                   probeFlips: Int): DataFrame =
-    DedupQueries.memoSharedRelation("knnlshport", embeddings,
+    SharedRelations("knnlshport", embeddings,
       k * 1000 + planes, probeFlips)(
       knnJoinLshUnordered(embeddings, k, planes, signSignaturesPortable,
         probeFlips))
@@ -622,7 +622,7 @@ object AnnQueries {
   : DataFrame = {
     val (index, queries) = deconSplit(embeddings, documents)
     val planes = planesFor(index.count())
-    DedupQueries.memoSharedRelation("embdecon",
+    SharedRelations("embdecon",
       embeddings.select(col("vec_id"))
         .join(documents.select(col("doc_id"), col("source")),
           col("vec_id") === col("doc_id")),

@@ -459,47 +459,18 @@ object AssemblyQueries {
     (table.result().toDF("step", "l", "r", "merged", "cnt"), cur)
   }
 
-  // ── bpeTrain memo (r11): q89 (merge table) and q90 (encoded stream)
-  // each ran the FULL 8-round driver loop — 8 aggregate+argmax collects
-  // and 8 checkpointed rewrites, twice per registry pass. One slot
-  // suffices (one corpus per run); keyed like the shared-relation
-  // cache: session identity + canonicalized input plan + merge count,
-  // hits confirmed by sameResult. The cached pair holds the driver-
-  // local merge table and the final checkpointed relation — both
-  // exactly what a second bpeTrain call would rebuild. ──
-  private case class BpeEntry(
-    session: Int,
-    plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    merges: Int, result: (DataFrame, DataFrame))
-  private val bpeCache =
-    new java.util.concurrent.atomic.AtomicReference[Option[BpeEntry]](None)
-
-  /** Drop the bpe memo slot. Wired into
-    * [[DedupQueries.clearSharedPairCache]] so the documented snapshot-
-    * boundary escape hatch (in-session corpus rewrites stale the
-    * plan-keyed hit) covers q89/q90 too (ADVICE r11); the slot's
-    * DataFrames are plain lineage (no persist), so dropping the
-    * reference is the whole release. */
-  private[operators] def clearBpeShared(): Unit = bpeCache.set(None)
-
-  /** [[bpeTrain]] through a single-slot memo — q89/q90 share one
-    * training run per (input, merges); results are the identical
-    * DataFrames a direct call returns. */
+  /** [[bpeTrain]] through one [[SharedRelations]] entry: q89 (merge
+    * table) and q90 (encoded relation) share a single training run per
+    * (input snapshot, merges) instead of each running the full driver
+    * loop of aggregate+argmax collects and checkpointed rewrites. The
+    * pair is stored as built — the identical DataFrames a direct call
+    * returns. */
   private def bpeTrainShared(documents: DataFrame, merges: Int)
-  : (DataFrame, DataFrame) = bpeCache.synchronized {
-    val plan = documents.queryExecution.analyzed
-    val sid = System.identityHashCode(documents.sparkSession)
-    bpeCache.get() match {
-      case Some(e) if e.session == sid && e.merges == merges &&
-        e.plan.sameResult(plan) &&
-        (e.result._2.sparkSession eq documents.sparkSession) =>
-        e.result
-      case _ =>
-        val built = bpeTrain(documents, merges)
-        bpeCache.set(Some(BpeEntry(sid, plan, merges, built)))
-        built
-    }
-  }
+  : (DataFrame, DataFrame) =
+    SharedRelations.group("bpe", documents, merges, 0) {
+      val (table, encoded) = bpeTrain(documents, merges)
+      Seq(table, encoded)
+    } match { case Seq(table, encoded) => (table, encoded) }
 
   /** Generates the unrolled DuckDB twin of [[bpeTrain]]: t0 → (p1 → m1 →
     * t1) → … — the q52 pattern. `select` picks the final projection over

@@ -122,7 +122,7 @@ object Checkpoints {
   /** Transfer ownership of every one-shot registered since `before` to
     * the caller: they are DEREGISTERED here (so [[releaseOneShots]]
     * won't delete them) and returned for the caller to delete when its
-    * own lifetime ends. Used by the shared-relation cache: a persisted
+    * own lifetime ends. Used by [[SharedRelations]]: a persisted
     * relation's LINEAGE may reference these checkpoints (recompute on
     * block loss), so they must live exactly as long as the cache
     * entry. `sameThreadOnly` restricts the claim to registrations made

@@ -696,16 +696,16 @@ object CurationQueries {
     * bit-identical to [[buildBm25Index]]'s (same plans), so scoring
     * output — and every oracle — is unchanged. */
   private[operators] def buildBm25IndexShared(documents: DataFrame): Bm25Index = {
-    val tf = DedupQueries.memoSharedRelation("bm25tf", documents, 0, 0) {
+    val tf = SharedRelations("bm25tf", documents, 0, 0) {
       documents.select(col("doc_id"), split(col("text"), " ").as("tk"))
         .select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
           explode(col("tk")).as("token"))
         .groupBy(col("doc_id"), col("dl"), col("token"))
         .agg(count(lit(1)).as("tf"))
     }
-    val dfRel = DedupQueries.memoSharedRelation("bm25df", documents, 0, 0)(
+    val dfRel = SharedRelations("bm25df", documents, 0, 0)(
       tf.groupBy(col("token")).agg(count(lit(1)).as("df")))
-    val totals = DedupQueries.memoSharedRelation("bm25tot", documents, 0, 0)(
+    val totals = SharedRelations("bm25tot", documents, 0, 0)(
       documents.agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("text"), " "))).cast("long").as("s_tokens")))
     Bm25Index(tf, dfRel, totals)

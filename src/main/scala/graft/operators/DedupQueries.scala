@@ -592,7 +592,7 @@ object DedupQueries {
   private[operators] def minhashBandedTokensShared(documents: DataFrame,
                                                    bands: Int,
                                                    rowsPerBand: Int): DataFrame =
-    memoShared("mhband", documents, bands, rowsPerBand)(
+    SharedRelations("mhband", documents, bands, rowsPerBand)(
       withTokenBands(documents.select(col("doc_id"), col("source"),
         // `n` (r12): the VERIFIER's distinct-token count, carried so
         // every banded-candidate consumer can run the exact LENGTH
@@ -1078,148 +1078,10 @@ object DedupQueries {
       .orderedOutput(col("doc_id"), col("rank"))
   }
 
-  // ── registry-level shared-relation cache (r7 verdict task #7):
-  // q112 (weighted Jaccard), q117 (containment) and q124 (top-k
-  // neighbors) consume the SAME TF-pair statistics over the same
-  // document relation — in a registry pass each re-ran the guarded
-  // co-occurrence pipeline. Keyed by the input's canonicalized logical
-  // plan + the join knobs; values are persisted MEMORY_AND_DISK
-  // (spills under pressure, lineage intact so lost blocks recompute —
-  // and deliberately NOT a reliable checkpoint, so releaseOneShots
-  // can't delete a relation the cache still hands out). Bounded to a
-  // few entries; clearSharedPairCache() frees them. ──
-  // r11: raised 8 → 24 — the shared-relation program now covers the
-  // BM25 index (3 relations), the exact/LSH kNN joins, the tiered edge
-  // relation (base + per-threshold filtered views) and the r10 set
-  // (tfpair, xclust, lshchain, fdecon, embdecon); r12 adds mhband (the
-  // corpus banding pass), bigcnt/unicnt (the n-gram count tables) —
-  // a full registry pass holds ~17 live entries, and an 8-entry LRU
-  // would evict relations (e.g. xclust) that later queries (q132)
-  // still reuse — eviction thrash, the opposite of the cache's point.
-  // Exposed for the spec so the eviction test fills to the REAL bound.
-  //
-  // AGGREGATE FOOTPRINT (ADVICE r11): the live set pins, for one
-  // registry pass, relations that are each SUBLINEAR in the corpus —
-  // pair/edge/component/count tables (pair-density- or vocabulary-
-  // sized) and the banding pass (docs × 8 rows of 7 scalars) — at
-  // MEMORY_AND_DISK, so memory pressure demotes blocks to executor
-  // disk rather than evicting work (lineage stays valid either way:
-  // a lost block recomputes). The trade vs the per-query one-shot
-  // checkpoints this replaced is bounded checkpoint STORAGE for
-  // registry-lifetime RESIDENCY; deployments where that residency is
-  // wrong (corpus rotation, memory-tight executors) bound it at the
-  // snapshot boundary with [[clearSharedPairCache]], which also brings
-  // every query back to its standalone, zero-residency cost.
-  private[operators] val MaxSharedPairEntries = 24
-  private final case class SharedEntry(
-    plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-    df: DataFrame,
-    owned: Seq[(org.apache.hadoop.conf.Configuration, String)])
-  // accessOrder = true: get() moves an entry to the tail, so the
-  // iteration head is the least-recently-used entry — the ONLY one
-  // eviction touches (r8 ADVICE: flushing the whole cache unpersisted
-  // relations other callers still held and deleted checkpoint dirs
-  // their block-loss recompute paths needed)
-  private val sharedCache =
-    new java.util.LinkedHashMap[(String, Int, Int, Int, Int), SharedEntry](
-      16, 0.75f, true)
-
-  // checkpoint dirs of EVICTED/COLLIDED entries await a later
-  // retirement boundary (r9 ADVICE): an in-flight query may still hold
-  // the evicted DataFrame, and unpersist is safe for it (block loss
-  // recomputes through the lineage) only while the one-shot checkpoints
-  // that lineage reads still exist — deleting them at eviction time
-  // would turn the recompute into FileNotFoundException. Deferral is
-  // BOUNDED (r10 review): beyond MaxRetiredOwned dirs the OLDEST
-  // deferred entries are deleted — they have survived many full
-  // eviction waves, so any holder of those relations is long done (the
-  // grace is eviction-distance, not wall-clock); clearSharedPairCache
-  // frees everything wholesale at the declared boundary.
-  private val MaxRetiredOwned = 32
-  private val retiredOwned = scala.collection.mutable.Queue
-    .empty[(org.apache.hadoop.conf.Configuration, String)]
-
-  /** Unpersist only; the entry's checkpoint storage moves to the
-    * deferred-retirement queue (oldest beyond the bound deleted).
-    * Best-effort: the entry may belong to a STOPPED session (keys are
-    * session-scoped, so such entries linger until evicted here) and
-    * unpersist on a dead context throws — that must not abort the
-    * unrelated query whose miss triggered the eviction. */
-  private def retireEntry(e: SharedEntry): Unit = {
-    try e.df.unpersist() catch { case _: Throwable => () }
-    retiredOwned ++= e.owned
-    while (retiredOwned.size > MaxRetiredOwned) {
-      val (c, p) = retiredOwned.dequeue()
-      try Checkpoints.deleteCheckpointDir(c, p)
-      catch { case _: Throwable => () }
-    }
-  }
-
-  private def dropAllShared(): Unit = {
-    sharedCache.values.forEach(retireEntry(_))
-    sharedCache.clear()
-    // the boundary where deletion IS safe: the caller asserts no
-    // consumer of any cached relation remains in flight
-    retiredOwned.foreach { case (c, p) =>
-      try Checkpoints.deleteCheckpointDir(c, p)
-      catch { case _: Throwable => () }
-    }
-    retiredOwned.clear()
-  }
-
-  /** Registry-level memoization of a shared relation. PRECONDITION: the
-    * input is an immutable snapshot for the cache's lifetime — the key
-    * is the canonicalized logical PLAN, which for a parquet read hashes
-    * the root path, not the file listing, so re-reading a path after an
-    * overwrite COLLIDES with the pre-overwrite entry and returns the
-    * stale cached relation. Registry runs over frozen testdata satisfy
-    * this; a deployment that rewrites its corpus in-session must call
-    * [[clearSharedPairCache]] at the snapshot boundary (r8 verdict
-    * stretch #8). Hits are confirmed, not trusted: semanticHash is
-    * 32-bit, so the cached plan must also `sameResult` the input's and
-    * the cached relation must belong to the SAME SparkSession (a hit
-    * from a stopped session would hand out a dead relation). */
-  private def memoShared(kind: String, input: DataFrame, a: Int, b: Int)
-                        (build: => DataFrame): DataFrame =
-    sharedCache.synchronized {
-      val plan = input.queryExecution.analyzed
-      val key = (kind, plan.semanticHash(),
-        System.identityHashCode(input.sparkSession), a, b)
-      Option(sharedCache.get(key))
-        .filter(e => (e.df.sparkSession eq input.sparkSession) &&
-          e.plan.sameResult(plan))
-        .map(_.df)
-        .getOrElse {
-          // a 32-bit hash collision (or dead-session residue) under this
-          // exact key: retire the impostor before rebuilding
-          Option(sharedCache.remove(key)).foreach(retireEntry)
-          if (sharedCache.size >= MaxSharedPairEntries) {
-            val it = sharedCache.entrySet().iterator()
-            if (it.hasNext) { val ev = it.next(); it.remove(); retireEntry(ev.getValue) }
-          }
-          // the built plan's LINEAGE may hold one-shot checkpoints (the
-          // similarity joins' candidate index); claim them so a runner's
-          // releaseOneShots can't delete storage a cached relation still
-          // needs for block-loss recompute — they die with the entry
-          val before = Checkpoints.snapshotOneShots()
-          val built = build
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          sharedCache.put(key,
-            // same-thread claim (r10 review): a window-only claim in a
-            // COMPOSED session could steal a concurrent sink's
-            // just-registered checkpoint — the releasingScoped hazard
-            // at this second claim site; the build runs on the calling
-            // thread, so its own one-shots are exactly what's claimed
-            SharedEntry(plan, built,
-              Checkpoints.claimOneShots(before, sameThreadOnly = true)))
-          built
-        }
-    }
-
   private def tfPairStatsShared(documents: DataFrame,
                                 heavyTokenThreshold: Int,
                                 salt: Int): DataFrame =
-    memoShared("tfpair", documents, heavyTokenThreshold, salt)(
+    SharedRelations("tfpair", documents, heavyTokenThreshold, salt)(
       tfPairStats(documents, heavyTokenThreshold, salt))
 
   /** Memoized near-dup EDGE relation — [[tokenPrefixJoin]] with
@@ -1227,29 +1089,14 @@ object DedupQueries {
     * [[tfPairStatsShared]] shares the TF pair statistics: q57
     * (components) and q81 (leakage-safe split) consume the identical
     * t = 0.5 edge set; q96 (PageRank) and q99 (canonical-by-rank) the
-    * identical t = 0.4 one. Keyed by input plan + threshold (scaled to
-    * ppm) + guard knob; persisted MEMORY_AND_DISK with lineage intact
-    * (a lost block recomputes), and the entry CLAIMS the one-shot
-    * checkpoints its lineage references, so a runner's
-    * [[graft.operators.Checkpoints.releaseOneShots]] never deletes
-    * storage the recompute path still needs. */
+    * identical t = 0.4 one. A [[SharedRelations]] entry keyed by the
+    * threshold (scaled to ppm) and the guard knob. */
   def tokenPrefixJoinShared(documents: DataFrame, threshold: Double,
                             heavyListThreshold: Int = 4096): DataFrame =
-    memoShared("edges", documents,
+    SharedRelations("edges", documents,
       math.round(threshold * 1000000).toInt, heavyListThreshold)(
       tokenPrefixJoin(documents, threshold, heavyListThreshold,
         sorted = false))
-
-  /** The shared-relation memo for OTHER operator modules' edge sets
-    * (r10: PipelineQueries' q125/q132 exact corpus-wide edges and
-    * q128/q132 LSH star edges — the q132 recall certificate re-derives
-    * both assignments, and without sharing a registry pass computes
-    * each edge set twice). Same key/lifetime semantics as
-    * [[tokenPrefixJoinShared]]; `kind` must be unique per construction. */
-  private[operators] def memoSharedRelation(kind: String, input: DataFrame,
-                                            a: Int, b: Int)
-                                           (build: => DataFrame): DataFrame =
-    memoShared(kind, input, a, b)(build)
 
   /** The base threshold of the TIERED shared edge relation
     * ([[tokenPrefixEdgesAtLeast]]) — the lowest threshold any registry
@@ -1279,13 +1126,13 @@ object DedupQueries {
     else {
       val base = tokenPrefixJoinShared(documents, EdgeBaseThreshold,
         heavyListThreshold)
-      memoShared("edgesf", documents,
+      SharedRelations("edgesf", documents,
         math.round(threshold * 1000000).toInt, heavyListThreshold)(
         base.filter(col("jac") >= threshold))
     }
 
   /** Component assignment over [[tokenPrefixEdgesAtLeast]]'s edge set,
-    * memoized (r11): q57 and q81 consume the IDENTICAL (id, component)
+    * memoized: q57 and q81 consume the IDENTICAL (id, component)
     * relation over the t = 0.5 edges, and star contraction (several
     * aggregate+join+checkpoint rounds) was the dominant cost of each —
     * one run now serves both. Result identical to calling
@@ -1296,25 +1143,10 @@ object DedupQueries {
     val edges = tokenPrefixEdgesAtLeast(documents, threshold,
         heavyListThreshold)
       .select(col("id1").as("u"), col("id2").as("v"))
-    memoShared("tokcc", documents,
+    SharedRelations("tokcc", documents,
       math.round(threshold * 1000000).toInt, heavyListThreshold)(
       ConnectedComponents.components(
         documents.select(col("doc_id").as("id")), edges))
-  }
-
-  /** Drop every cached shared pair/edge relation (frees executor
-    * storage and the checkpoint directories the entries own, INCLUDING
-    * dirs whose deletion earlier evictions deferred — see
-    * [[retireEntry]]). Runners keep the cache alive across queries —
-    * that is its point — so this is for deployments that move on to a
-    * different corpus, called when no consumer of any previously
-    * returned shared relation remains in flight. */
-  def clearSharedPairCache(): Unit = sharedCache.synchronized {
-    dropAllShared()
-    // the bpe training memo lives outside this cache but shares its
-    // lifecycle contract (ADVICE r11): the snapshot boundary must
-    // cover every plan-keyed memo
-    AssemblyQueries.clearBpeShared()
   }
 
   /** Shared TF-pair statistics of q112/q117/q124: unordered

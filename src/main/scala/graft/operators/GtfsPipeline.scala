@@ -651,8 +651,14 @@ object GtfsPipeline {
     * plans reference the prediction relation several times, and any cache
     * miss/eviction under the driver harness re-ran the entire
     * records→curves→ladder pipeline per reference (BENCH_r02: 57 s for an
-    * 11-row board). A per-JVM temp dir (not a repo path) keeps the driver's
-    * fresh-JVM verify/bench runs always building from current code. */
+    * 11-row board). A per-JVM temp dir (not a repo path) keeps fresh-JVM
+    * verify and bench runs always building from current code, and is
+    * deleted when the JVM exits.
+    *
+    * Not a [[SharedRelations]] entry: a stage has no input relation to
+    * fingerprint (it builds from the committed fixture files, which do
+    * not change within a JVM), and its on-disk parquet policy was chosen
+    * over the memo's in-session persist by measurement (above). */
   private val stagePaths = scala.collection.mutable.Map.empty[String, String]
 
   // reentrant lock: a stage's build may itself request earlier stages
@@ -661,8 +667,9 @@ object GtfsPipeline {
                           (build: => DataFrame): DataFrame = {
     val path = synchronized {
       stagePaths.getOrElseUpdate(stage, {
-        val dir = java.nio.file.Files.createTempDirectory(s"graft-fixture-$stage")
-          .resolve(s"$stage.parquet").toString
+        val tmp = java.nio.file.Files.createTempDirectory(s"graft-fixture-$stage")
+        sys.addShutdownHook(org.apache.hadoop.fs.FileUtil.fullyDelete(tmp.toFile))
+        val dir = tmp.resolve(s"$stage.parquet").toString
         build.write.mode("overwrite").parquet(dir)
         dir
       })

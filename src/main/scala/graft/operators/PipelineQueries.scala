@@ -239,7 +239,7 @@ object PipelineQueries {
   : org.apache.spark.sql.DataFrame = {
     val pairs = DedupQueries.tokenPrefixEdgesAtLeast(documents, threshold)
       .select(col("id1"), col("id2"))
-    DedupQueries.memoSharedRelation("prank", documents,
+    SharedRelations("prank", documents,
       math.round(threshold * 1000000).toInt, iterations)(
       pageRankOn(documents.select(col("doc_id")), pairs, iterations))
   }
@@ -425,7 +425,7 @@ object PipelineQueries {
                                 threshold: Double,
                                 bands: Int, rowsPerBand: Int)
   : org.apache.spark.sql.DataFrame =
-    DedupQueries.memoSharedRelation("fdecon", documents,
+    SharedRelations("fdecon", documents,
       math.round(threshold * 1000000).toInt, bands * 100 + rowsPerBand) {
       val bandKey = Seq("band", "s0", "s1", "s2", "s3")
       val ev = documents.filter(col("source") === "src0")
@@ -789,7 +789,7 @@ object PipelineQueries {
                                  threshold: Double,
                                  heavyListThreshold: Int)
   : org.apache.spark.sql.DataFrame = {
-    val edges = DedupQueries.memoSharedRelation("xclust",
+    val edges = SharedRelations("xclust",
         documents, math.round(threshold * 1000000).toInt, heavyListThreshold)(
         DedupQueries.tokenPrefixJoin(
           documents.select(col("doc_id"), lit("all").as("source"), col("text")),
@@ -799,7 +799,7 @@ object PipelineQueries {
     // each ran the full star-contraction loop (every round = two keyed
     // aggregations + joins + a checkpoint + a checksum action) over the
     // identical edge set; one run now serves both.
-    DedupQueries.memoSharedRelation("xclustcc",
+    SharedRelations("xclustcc",
       documents, math.round(threshold * 1000000).toInt, heavyListThreshold)(
       ConnectedComponents.components(
         documents.select(col("doc_id").as("id")), edges))
@@ -895,13 +895,13 @@ object PipelineQueries {
                                rowsPerBand: Int = LshRows,
                                chainHops: Int = ChainHops)
   : org.apache.spark.sql.DataFrame = {
-    val verified = DedupQueries.memoSharedRelation("lshchain",
+    val verified = SharedRelations("lshchain",
       documents, math.round(threshold * 1000000).toInt,
       bands * 10000 + rowsPerBand * 100 + chainHops)(
       lshChainEdges(documents, threshold, bands, rowsPerBand, chainHops))
     // r11: component assignment memoized like the edges — q128/q132
     // shared the edge set but each re-ran star contraction over it
-    DedupQueries.memoSharedRelation("lshchaincc",
+    SharedRelations("lshchaincc",
       documents, math.round(threshold * 1000000).toInt,
       bands * 10000 + rowsPerBand * 100 + chainHops)(
       ConnectedComponents.components(
@@ -1050,7 +1050,7 @@ object PipelineQueries {
   private[operators] def bigramCountsShared(
       documents: org.apache.spark.sql.DataFrame)
   : org.apache.spark.sql.DataFrame =
-    DedupQueries.memoSharedRelation("bigcnt", documents, 0, 0)(
+    SharedRelations("bigcnt", documents, 0, 0)(
       adjacentBigrams(documents).groupBy(col("t1"), col("t2"))
         .agg(count(lit(1)).as("c")))
 
@@ -1060,7 +1060,7 @@ object PipelineQueries {
   private[operators] def unigramCountsShared(
       documents: org.apache.spark.sql.DataFrame)
   : org.apache.spark.sql.DataFrame =
-    DedupQueries.memoSharedRelation("unicnt", documents, 0, 0)(
+    SharedRelations("unicnt", documents, 0, 0)(
       documents.select(explode(tokens(col("text"))).as("t"))
         .groupBy(col("t")).agg(count(lit(1)).as("c")))
 

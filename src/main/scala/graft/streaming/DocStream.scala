@@ -515,9 +515,10 @@ object DocStream {
     * mid-init replays through the sink's own watermark/skip guards
     * (batch 0 overwrites its partitions, compaction against an
     * already-compacted store only finishes retirement). The store is
-    * keyed by the corpus file's (path, length, mtime) so a regenerated
-    * corpus can never probe a stale index. Returns the store path for
-    * [[loadBm25Index]]. A probe query against the result is
+    * keyed by [[graft.operators.SharedRelations.snapshotId]] of the
+    * corpus (every file's path, length and mtime), the memo's snapshot
+    * rule, so a regenerated corpus can never probe a stale index.
+    * Returns the store path for [[loadBm25Index]]. A probe query against the result is
     * bm25ScoreIndexed — identical relations to an offline build
     * (spec-pinned), but the per-query-batch cost is probe-shaped: no
     * corpus aggregation, just the broadcast term set against the
@@ -526,16 +527,11 @@ object DocStream {
                     storeRoot: String = sys.env.getOrElse(
                       "SPARK_GRAFT_STORE_DIR", "spark-warehouse/stores"))
   : String = {
-    val src = new org.apache.hadoop.fs.Path(s"$sfDir/documents.parquet")
-    val st = fsOf(spark, sfDir).getFileStatus(src)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"${src.toString}|${st.getLen}|${st.getModificationTime}"
-        .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
+    val documents = graft.sources.Tables.documents(spark, sfDir)
+    val key = graft.operators.SharedRelations.snapshotId(documents)
     val path = s"$storeRoot/bm25/$key"
     if (readLongMarker(spark, path, "_store_ready").isEmpty) {
-      bm25IndexSink(path)(
-        graft.sources.Tables.documents(spark, sfDir), 0L)
+      bm25IndexSink(path)(documents, 0L)
       compactBm25Index(spark, path)
       writeLongMarker(spark, path, "_store_ready", 1L)
     }

@@ -172,6 +172,41 @@ class AssemblySpec extends SparkSpec {
     }
   }
 
+  test("q89 then q90 share one bpeTrain run per corpus snapshot") {
+    import spark.implicits._
+    val sf = java.nio.file.Files.createTempDirectory("graft-bpe-sf")
+    def writeCorpus(texts: Seq[String]): Unit =
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text").coalesce(1)
+        .write.mode("overwrite").parquet(s"$sf/documents.parquet")
+    def run(name: String) =
+      AssemblyQueries.registry(name).build(spark, sf.toString).collect().toSeq
+    def counts = (SharedRelations.hits, SharedRelations.misses)
+    SharedRelations.clear()
+    try {
+      writeCorpus(Seq("the cat sat on the cat mat", "the cat ate the cat food",
+        "a dog saw the cat run", "a dog ate the dog food"))
+      val (h0, m0) = counts
+      val merges = run("q89_bpe_merges")
+      val encode = run("q90_bpe_encode")
+      assert(counts === ((h0 + 1, m0 + 1)), "one miss (q89), one hit (q90)")
+      val (table, encoded) = AssemblyQueries.bpeTrain(
+        graft.sources.Tables.documents(spark, sf.toString), merges = 8)
+      assert(merges === table.orderBy("step").collect().toSeq)
+      assert(encode === encoded.select(col("doc_id"),
+          size(split(col("s"), " ")).as("n_syms"), md5(col("s")))
+        .orderBy("doc_id").collect().toSeq)
+      // a rewritten corpus is a new snapshot: the memo rebuilds
+      writeCorpus(Seq("a dog saw the dog run", "the cat sat"))
+      val (_, m1) = counts
+      run("q89_bpe_merges")
+      assert(SharedRelations.misses === m1 + 1)
+    } finally {
+      SharedRelations.clear()
+      org.apache.hadoop.fs.FileUtil.fullyDelete(sf.toFile)
+    }
+  }
+
   test("mixManifest equals a pure-Scala re-execution of the whole pipeline") {
     val rows = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("doc_id", "source", "text").collect()

@@ -695,7 +695,7 @@ class PipelineQueriesSpec extends SparkSpec {
         size(array_distinct(split(col("text"), " "))).as("vn")), Seq("doc_id"))
       .filter(col("n") =!= col("vn")).count()
     assert(nOk === 0L, "banded n diverges from the verifier token count")
-    DedupQueries.clearSharedPairCache()
+    SharedRelations.clear()
   }
 
   test("q137 cross-corpus scrub: brute-subset exactness; salted path result-identical") {

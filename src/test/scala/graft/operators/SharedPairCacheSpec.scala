@@ -2,16 +2,16 @@ package graft.operators
 
 import graft.SparkSpec
 
-/** The registry-level shared-relation cache
-  * ([[DedupQueries.tokenPrefixJoinShared]] /
-  * `DedupQueries.tfPairStatsShared`): result parity with the uncached
-  * build, one materialization per (input, knobs) key, and — the subtle
-  * part — the CLAIM handshake with [[Checkpoints]]: a shared build's
-  * one-shot checkpoints transfer to the cache entry, so a runner's
-  * `releaseOneShots()` (called after every registry query) cannot
-  * delete storage the persisted relation's lineage still needs for
-  * block-loss recompute. The claimed directories die with the entry
-  * (`clearSharedPairCache`). */
+/** The shared-relation memo ([[SharedRelations]], exercised through
+  * [[DedupQueries.tokenPrefixJoinShared]]): result parity with the
+  * uncached build, one materialization per (input, knobs) key, the
+  * snapshot rule (a rewritten input is rebuilt, an unchanged re-read
+  * hits), and — the subtle part — the CLAIM handshake with
+  * [[Checkpoints]]: a shared build's one-shot checkpoints transfer to
+  * the memo entry, so a runner's `releaseOneShots()` (called after
+  * every registry query) cannot delete storage the persisted
+  * relation's lineage still needs for block-loss recompute. The
+  * claimed directories die with the entry (`SharedRelations.clear`). */
 class SharedPairCacheSpec extends SparkSpec {
 
   private def withCheckpointDir[T](f: => T): T = {
@@ -19,9 +19,12 @@ class SharedPairCacheSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-shared-ckpt")
     sc.setCheckpointDir(dir.toString)
     try f
-    finally sc.getClass
-      .getMethod("checkpointDir_$eq", classOf[Option[String]])
-      .invoke(sc, None)
+    finally {
+      sc.getClass
+        .getMethod("checkpointDir_$eq", classOf[Option[String]])
+        .invoke(sc, None)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(dir.toFile)
+    }
   }
 
   private def rddDirs(): Seq[String] = {
@@ -34,11 +37,13 @@ class SharedPairCacheSpec extends SparkSpec {
     walk(root).map(_.getName)
   }
 
-  private def corpus(seed: Int) = {
+  private def corpus(seed: Int, clusterSize: Int = 3) = {
     import spark.implicits._
-    // clusters of near-identical docs so the 0.5 join has real edges
+    // clusters of near-identical docs so the 0.5 join has real edges:
+    // within-source pairs only, so 36 docs in clusters of 3 give 12
+    // edges and in clusters of 4 give 18
     (0L until 36L).map { i =>
-      val base = (0 until 8).map(j => s"w${seed}_${i / 3}_$j")
+      val base = (0 until 8).map(j => s"w${seed}_${i / clusterSize}_$j")
       val noise = s"n${seed}_$i"
       (i, s"src${i % 2}", (base :+ noise).mkString(" "))
     }.toDF("doc_id", "source", "text")
@@ -49,7 +54,7 @@ class SharedPairCacheSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
 
   test("shared edge relation equals the uncached build and memoizes") {
-    DedupQueries.clearSharedPairCache()
+    SharedRelations.clear()
     try {
       val docs = corpus(1)
       val shared = DedupQueries.tokenPrefixJoinShared(docs, threshold = 0.5)
@@ -64,11 +69,11 @@ class SharedPairCacheSpec extends SparkSpec {
       // a different threshold is a different relation
       assert(!(DedupQueries.tokenPrefixJoinShared(docs, threshold = 0.8)
         eq shared))
-    } finally DedupQueries.clearSharedPairCache()
+    } finally SharedRelations.clear()
   }
 
   test("tiered edge relation: filtered base == direct build, memoized") {
-    DedupQueries.clearSharedPairCache()
+    SharedRelations.clear()
     try {
       val docs = corpus(4)
       val tiered = DedupQueries.tokenPrefixEdgesAtLeast(docs, threshold = 0.5)
@@ -90,16 +95,16 @@ class SharedPairCacheSpec extends SparkSpec {
       // the relation the tiered build derived from
       val base = DedupQueries.tokenPrefixEdgesAtLeast(docs, threshold = 0.4)
       assert(base eq DedupQueries.tokenPrefixJoinShared(docs, threshold = 0.4))
-    } finally DedupQueries.clearSharedPairCache()
+    } finally SharedRelations.clear()
   }
 
   test("eviction retires only the least-recently-used entry") {
-    DedupQueries.clearSharedPairCache()
+    SharedRelations.clear()
     try {
       val docs = corpus(5)
       // fill the cache to its bound with distinct knob keys (thresholds
       // spread inside (0.3, 0.8) so every entry is a distinct ppm key)
-      val cap = DedupQueries.MaxSharedPairEntries
+      val cap = SharedRelations.MaxEntries
       val ts = (1 to cap).map(i => 0.30 + i * 0.5 / (cap + 1))
       val entries = ts.map(t =>
         t -> DedupQueries.tokenPrefixJoinShared(docs, threshold = t)).toMap
@@ -115,11 +120,11 @@ class SharedPairCacheSpec extends SparkSpec {
       // entries 3..8 were never candidates: still memoized
       assert(DedupQueries.tokenPrefixJoinShared(docs, threshold = ts(4))
         eq entries(ts(4)))
-    } finally DedupQueries.clearSharedPairCache()
+    } finally SharedRelations.clear()
   }
 
   test("a hit never crosses SparkSessions") {
-    DedupQueries.clearSharedPairCache()
+    SharedRelations.clear()
     try {
       val docs = corpus(6)
       val shared = DedupQueries.tokenPrefixJoinShared(docs, threshold = 0.5)
@@ -135,12 +140,12 @@ class SharedPairCacheSpec extends SparkSpec {
       assert(!(sharedB eq shared))
       assert(sharedB.sparkSession eq other)
       assert(collectPairs(sharedB) === collectPairs(shared))
-    } finally DedupQueries.clearSharedPairCache()
+    } finally SharedRelations.clear()
   }
 
   test("runner release cannot delete a cached relation's claimed checkpoints") {
     withCheckpointDir {
-      DedupQueries.clearSharedPairCache()
+      SharedRelations.clear()
       try {
         val docs = corpus(2)
         val shared = DedupQueries.tokenPrefixJoinShared(docs, threshold = 0.5)
@@ -160,16 +165,16 @@ class SharedPairCacheSpec extends SparkSpec {
         assert(collectPairs(shared) === expected,
           "recompute through claimed checkpoints after block loss")
         // the claimed directories die with the cache entry
-        DedupQueries.clearSharedPairCache()
+        SharedRelations.clear()
         assert(rddDirs().isEmpty,
-          "clearSharedPairCache must delete the claimed directories")
-      } finally DedupQueries.clearSharedPairCache()
+          "SharedRelations.clear must delete the claimed directories")
+      } finally SharedRelations.clear()
     }
   }
 
   test("an unrelated one-shot in the same window is still released") {
     withCheckpointDir {
-      DedupQueries.clearSharedPairCache()
+      SharedRelations.clear()
       try {
         val docs = corpus(3)
         DedupQueries.tokenPrefixJoinShared(docs, threshold = 0.5)
@@ -182,7 +187,71 @@ class SharedPairCacheSpec extends SparkSpec {
         Checkpoints.releaseOneShots()
         assert(rddDirs().toSet === claimed,
           "release drops the plain query's dirs, keeps the claimed ones")
-      } finally DedupQueries.clearSharedPairCache()
+      } finally SharedRelations.clear()
     }
+  }
+
+  /** A parquet input path under a fresh temp dir, deleted after `f`. */
+  private def withInputPath[T](f: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory("graft-shared-input")
+    try f(root.resolve("documents.parquet").toString)
+    finally org.apache.hadoop.fs.FileUtil.fullyDelete(root.toFile)
+  }
+
+  private def plainEdges(docs: org.apache.spark.sql.DataFrame) =
+    collectPairs(DedupQueries.tokenPrefixJoin(docs, threshold = 0.5,
+      sorted = false))
+
+  test("a Spark overwrite of the input is rebuilt from the new files") {
+    SharedRelations.clear()
+    try withInputPath { path =>
+      corpus(7).write.parquet(path)
+      val old = DedupQueries.tokenPrefixJoinShared(spark.read.parquet(path),
+        threshold = 0.5)
+      assert(collectPairs(old).size === 12)
+      corpus(7, clusterSize = 4).write.mode("overwrite").parquet(path)
+      val docs = spark.read.parquet(path)
+      assert(plainEdges(docs).size === 18)
+      assert(collectPairs(DedupQueries.tokenPrefixJoinShared(docs,
+        threshold = 0.5)) === plainEdges(docs))
+    } finally SharedRelations.clear()
+  }
+
+  test("input files replaced outside Spark are rebuilt from the new files") {
+    SharedRelations.clear()
+    try withInputPath { path =>
+      corpus(8).write.parquet(path)
+      val old = DedupQueries.tokenPrefixJoinShared(spark.read.parquet(path),
+        threshold = 0.5)
+      assert(collectPairs(old).size === 12)
+      // write the new corpus beside the input, then swap the directories
+      // with plain filesystem calls: Spark never hears of the change
+      val staged = s"$path.staged"
+      corpus(8, clusterSize = 4).write.parquet(staged)
+      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(path))
+      java.nio.file.Files.move(java.nio.file.Paths.get(staged),
+        java.nio.file.Paths.get(path))
+      val docs = spark.read.parquet(path)
+      assert(plainEdges(docs).size === 18)
+      assert(collectPairs(DedupQueries.tokenPrefixJoinShared(docs,
+        threshold = 0.5)) === plainEdges(docs))
+    } finally SharedRelations.clear()
+  }
+
+  test("an unchanged re-read of the input hits") {
+    SharedRelations.clear()
+    try withInputPath { path =>
+      corpus(9).write.parquet(path)
+      val first = spark.read.parquet(path)
+      assert(SharedRelations.fingerprint(first).nonEmpty)
+      assert(SharedRelations.fingerprint(corpus(9)).isEmpty,
+        "an in-memory relation reads no files")
+      val shared = DedupQueries.tokenPrefixJoinShared(first, threshold = 0.5)
+      val (hits, misses) = (SharedRelations.hits, SharedRelations.misses)
+      assert(DedupQueries.tokenPrefixJoinShared(spark.read.parquet(path),
+        threshold = 0.5) eq shared)
+      assert((SharedRelations.hits - hits, SharedRelations.misses - misses)
+        === ((1L, 0L)))
+    } finally SharedRelations.clear()
   }
 }
