@@ -23,6 +23,13 @@ object GraftSession {
     spark
   }
 
+  /** Whether `path` exists, asked of the path's own Hadoop file system,
+    * so `file:`, `hdfs:` and `s3a:` URIs answer like plain local paths. */
+  def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
   /** The core count the command-line mains run at: `SPARK_GRAFT_CPUS`,
     * 4 when unset. */
   def envCores: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)

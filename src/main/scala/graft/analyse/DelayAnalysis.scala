@@ -3,7 +3,7 @@ package graft.analyse
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.curves.{Curve, CurveBuilder}
+import graft.curves.{Curve, CurveBuilder, PairRuns}
 import graft.model.{EventType, GtfsTime, PrecisionType, RouteSection, TimeSlot}
 import graft.gtfs.GtfsStatic
 
@@ -138,18 +138,13 @@ object DelayAnalysis {
     // otherwise gets the UDF expression substituted into every reference
     // by CollapseProject, running the curve build repeatedly per group
     // (same collapse-barrier trick as Predictor.capPointsUdf)
-    val buildUdf = udf((rows: Seq[org.apache.spark.sql.Row]) => {
-      val all = rows.map(r => (r.getInt(0), r.getFloat(1)))
-      val dflt = TimeSlot.Default.id
-      val groups = all.groupBy(_._1).view.filterKeys(_ != dflt).toSeq :+
-        ((dflt, all ++ all.filter(_._1 == dflt)))
-      groups.flatMap { case (slot, ds) =>
-        CurveBuilder.generalDelayCurve(ds.map(_._2)).map { cd =>
+    val buildUdf = udf((rows: Seq[org.apache.spark.sql.Row]) =>
+      slotGroups(rows.map(r => (r.getInt(0), r.getFloat(1)))).flatMap { case (slot, ds) =>
+        CurveBuilder.generalDelayCurve(ds).map { cd =>
           (slot, cd.precisionType, cd.sampleSize,
             cd.curve.points.map(p => CurvePoint(p._1, p._2)))
         }
-      }
-    }).asNondeterministic()
+      }).asNondeterministic()
     eventLong(projected)
       .groupBy(col("route_id"), col("route_variant"), col("stop_index"),
         col("event_type"))
@@ -209,6 +204,41 @@ object DelayAnalysis {
         col("start_delay"), col("end_delay"))
   }
 
+  /** The slot groups one stop or stop-pair group builds: each matched
+    * slot's entries, plus the Default slot over every entry. Entries whose
+    * MATCHED slot is the Default id (dead in practice — the taxonomy covers
+    * all 168 hours) land twice in the Default group, exactly as the
+    * exploded relation ([[stopPairRows]]) would put them. Shared by the
+    * general and stop-pair builds and by [[graft.streaming.CurveStream]],
+    * so the paths cannot drift. */
+  private[graft] def slotGroups[A](entries: Seq[(Int, A)]): Seq[(Int, Seq[A])] = {
+    val dflt = TimeSlot.Default.id
+    entries.groupBy(_._1).view.filterKeys(_ != dflt).toSeq.map { case (s, es) => (s, es.map(_._2)) } :+
+      ((dflt, (entries ++ entries.filter(_._1 == dflt)).map(_._2)))
+  }
+
+  /** The curve sets of one stop-pair group's slot groups, each gated at
+    * more than 20 pairs (F9, reference `specific_curves.rs:337`). */
+  private[graft] def pairCurveSets(groups: Seq[(Int, PairRuns)])
+  : Seq[(Int, Int, Int, Seq[FocusCurve])] =
+    groups.flatMap { case (slot, pairs) =>
+      if (pairs.total <= 20) None
+      else CurveBuilder.stopPairCurveSet(pairs).map { csd =>
+        (slot, csd.precisionType, csd.sampleSize,
+          csd.curveSet.curves.map { case (f, c) =>
+            FocusCurve(f, c.points.map(p => CurvePoint(p._1, p._2)))
+          })
+      }
+    }
+
+  /** One stop-pair group's curve sets over its (slot, start_delay,
+    * end_delay) rows. Input ORDER is irrelevant: the pairs become
+    * (start, end)-sorted runs. */
+  private[graft] def buildPairCurveSets(all: Seq[(Int, Float, Float)])
+  : Seq[(Int, Int, Int, Seq[FocusCurve])] =
+    pairCurveSets(slotGroups(all.map(r => (r._1, (r._2, r._3))))
+      .map { case (slot, ps) => (slot, PairRuns.of(ps)) })
+
   /** A7 (with J3): stop-pair curve sets. The self-join inside
     * [[stopPairRowsBase]] is equi-keyed on the vehicle; the theta
     * condition end > start only multiplies within a vehicle's own stop
@@ -216,36 +246,11 @@ object DelayAnalysis {
     *
     * Shuffle shape: ONE shuffle of the un-exploded pair rows keyed by
     * (pair, event); the per-slot split AND the Default-slot aggregate
-    * happen group-locally inside the builder UDF. Exploding the Default
-    * duplicate before the shuffle (the previous shape) doubled shuffle
-    * volume for no information; max group size is unchanged (the Default
-    * group already held every one of the pair's rows). Output is
+    * happen group-locally inside the builder UDF ([[slotGroups]]).
+    * Exploding the Default duplicate before the shuffle would double
+    * shuffle volume for no information; max group size is the same (the
+    * Default group holds every one of the pair's rows). Output is
     * identical (spec-pinned vs the exploded relation). */
-  /** One stop-pair group's curve-set build over its (slot, start_delay,
-    * end_delay) rows: per matched slot, plus Default over every row; rows
-    * whose MATCHED slot is the Default id (dead in practice — the
-    * taxonomy covers all 168 hours) land twice in the Default group,
-    * exactly as the exploded relation would put them. Shared by the batch
-    * aggregate below and [[graft.streaming.CurveStream]]'s incremental
-    * twin — one body, so the two paths cannot drift. Input ORDER is
-    * irrelevant: [[CurveBuilder.stopPairCurveSet]] sorts by the full
-    * (start, end) key. */
-  private[graft] def buildPairCurveSets(all: Seq[(Int, Float, Float)])
-  : Seq[(Int, Int, Int, Seq[FocusCurve])] = {
-    val dflt = TimeSlot.Default.id
-    val groups = all.groupBy(_._1).view.filterKeys(_ != dflt).toSeq :+
-      (dflt, all ++ all.filter(_._1 == dflt))
-    groups.flatMap { case (slot, rows) =>
-      if (rows.length <= 20) None // F9 gate, reference `:337`
-      else CurveBuilder.stopPairCurveSet(rows.map(r => (r._2, r._3))).map { csd =>
-        (slot, csd.precisionType, csd.sampleSize,
-          csd.curveSet.curves.map { case (f, c) =>
-            FocusCurve(f, c.points.map(p => CurvePoint(p._1, p._2)))
-          })
-      }
-    }
-  }
-
   def stopPairCurveSets(projected: DataFrame): DataFrame = {
     val pairs = stopPairRowsBase(projected)
     // group via codegen'd collect_list (ObjectHashAggregate), NOT typed

@@ -114,95 +114,55 @@ object Curve {
     }
   }
 
-  /** Weighted empirical CDF (reference `make_curve`,
-    * `src/analyser/curve_utils.rs:65-94`). Returns the curve and the sum of
-    * weights, or None when fewer than 2 distinct points would result.
-    *
-    * Faithful to the reference's exact construction: values sorted; a point
-    * is emitted at the FIRST occurrence of each new x with the cumulative
-    * weight up to and including that occurrence (later duplicates add weight
-    * but no point); `last_x` starts at 0.0 so a leading value of exactly 0.0
-    * emits no point; first y forced to 0, last to 1. */
-  def makeCurve(values: Seq[Float], focus: Option[Float]): Option[(Curve, Float)] = {
-    if (values.isEmpty) return None
-    // r12 (guide §1.2 step 2, per-task work): primitive arrays + while
-    // loops. The previous shape indexed `sorted(i)`/`weights(i)` on
-    // whatever Seq the caller passed — O(i) PER ACCESS on a List (an
-    // O(n²) trap for list-typed callers) and boxed Float everywhere.
-    // Arithmetic is UNCHANGED in value and order: Arrays.sort(float[])
-    // realizes the same total order as Ordering.Float.TotalOrdering
-    // (-0.0 < 0.0, NaN greatest — and no caller produces either), the
-    // weight sum accumulates left-to-right over the sorted order
-    // exactly as `weights.sum` did, and the emission loop is verbatim.
-    val sorted = new Array[Float](values.length)
-    var i = 0
-    values.foreach { v => sorted(i) = v; i += 1 }
-    java.util.Arrays.sort(sorted)
-    val minD = sorted(0)
-    val maxD = sorted(sorted.length - 1)
-    val weights = new Array[Float](sorted.length)
-    var sumW = 0.0f
-    i = 0
-    while (i < sorted.length) {
-      val w = weight(sorted(i), focus, minD, maxD)
-      weights(i) = w
-      sumW += w
-      i += 1
-    }
-    val buf = Vector.newBuilder[(Float, Float)]
-    var lastX = 0.0f
-    var cum = 0.0f
-    var n = 0
-    i = 0
-    while (i < sorted.length) {
-      cum += weights(i)
-      if (sorted(i) != lastX) {
-        buf += ((sorted(i), cum / sumW))
-        lastX = sorted(i)
-        n += 1
-      }
-      i += 1
-    }
-    val tups = buf.result()
-    if (n < 2) None
-    else {
-      val pinned = tups
-        .updated(0, (tups.head._1, 0.0f))
-        .updated(n - 1, (tups.last._1, 1.0f))
-      Some((Curve(pinned), sumW))
-    }
-  }
+  def makeCurve(values: Seq[Float], focus: Option[Float]): Option[(Curve, Float)] =
+    makeCurve(Runs.of(values), focus)
 
-  /** [[makeCurve]] with focus = None over a COUNT HISTOGRAM instead of
-    * the expanded multiset — the streaming-maintenance entry point
-    * ([[graft.streaming.CurveStream]]): state holds (value → count), not
-    * every observation.
+  /** Weighted empirical CDF (reference `make_curve`,
+    * `src/analyser/curve_utils.rs:65-94`) — the one ECDF loop. Returns the
+    * curve and the sum of weights, or None when fewer than 2 points result.
     *
-    * Bit-equality argument (spec-pinned): with no focus every weight is
-    * 1.0f, so the batch loop's running `cum` after k occurrences is the
-    * float k.0f EXACTLY while k < 2²⁴ — the same value this loop gets
-    * from the integer prefix count. Point emission mirrors makeCurve
-    * verbatim: the point for each distinct x carries the cumulative
-    * weight of its FIRST occurrence only, `lastX` starts at 0.0f (so a
-    * leading value of exactly 0.0 emits no point but still adds weight),
-    * first y pins to 0, last to 1. Counts beyond 2²⁴ total would diverge
-    * from the expansion in the last float ulp — callers keep sample
-    * caps, as the reference's importer effectively does. */
-  def makeCurveFromCounts(entries: Seq[(Float, Long)]): Option[(Curve, Float)] = {
-    if (entries.isEmpty) return None
-    val sorted = entries.sortBy(_._1)
-    val sumW = sorted.iterator.map(_._2).sum.toFloat
+    * Faithful to the reference over the expanded sorted values: weights
+    * sum left to right in f32; each new x emits a point at its FIRST
+    * occurrence with the cumulative weight up to and including it; `last_x`
+    * starts at 0.0, so a leading 0.0 emits no point; first y is forced to
+    * 0, last to 1. A run of c values adds its weight c times in that order,
+    * so any count gives the expanded loop's bits. Unfocused weights are all
+    * 1.0f, and an f32 sum of k ones from an integer s is exactly
+    * min(s + k, 2^24): that closed form keeps the unfocused loop
+    * O(distinct values). */
+  def makeCurve(runs: Runs, focus: Option[Float]): Option[(Curve, Float)] = {
+    val xs = runs.xs
+    val k = xs.length
+    if (k == 0) return None
+    val minD = xs(0)
+    val maxD = xs(k - 1)
+    // the running sum after each run's first occurrence: the emitted cum
+    val firstCum = new Array[Float](k)
+    var sumW = 0.0f
+    var j = 0
+    while (j < k) {
+      val w = weight(xs(j), focus, minD, maxD)
+      sumW += w
+      firstCum(j) = sumW
+      val rest = runs.counts(j) - 1
+      if (focus.isEmpty) sumW = math.min(sumW.toLong + rest, 1L << 24).toFloat
+      else {
+        var r = 0L
+        while (r < rest) { sumW += w; r += 1 }
+      }
+      j += 1
+    }
     val buf = Vector.newBuilder[(Float, Float)]
     var lastX = 0.0f
-    var cumBefore = 0L
     var n = 0
-    sorted.foreach { case (v, c) =>
-      if (v != lastX) {
-        buf += ((v, (cumBefore + 1).toFloat / sumW))
-        lastX = v
+    j = 0
+    while (j < k) {
+      if (xs(j) != lastX) {
+        buf += ((xs(j), firstCum(j) / sumW))
+        lastX = xs(j)
         n += 1
       }
-      cumBefore += c
+      j += 1
     }
     val tups = buf.result()
     if (n < 2) None

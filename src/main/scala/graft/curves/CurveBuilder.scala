@@ -1,6 +1,7 @@
 package graft.curves
 
 import scala.collection.mutable
+import graft.model.PrecisionType
 
 /** Group-local curve construction — the analytic heart of the engine.
   * These pure functions run inside Spark Aggregators / flatMapGroups over
@@ -13,101 +14,88 @@ object CurveBuilder {
     * (reference `src/analyser/specific_curves.rs:262-264,315`). */
   val DelayThreshold = 3000
 
-  /** Delays are rounded to multiples of 12 s with integer division, i.e.
-    * truncation toward zero (reference `src/analyser/specific_curves.rs:316-320`). */
-  def roundDelay(d: Int): Int = (d / 12) * 12
-
   /** General per-stop delay curve (reference `generate_delay_curve_data`,
     * `src/analyser/specific_curves.rs:356-369`): >=20 values, make_curve
     * without focus, simplify(0.01), PrecisionType=SemiSpecific(2). */
-  def generalDelayCurve(delays: Seq[Float]): Option[CurveData] = {
-    if (delays.length < 20) return None
-    Curve.makeCurve(delays, None).map { case (c, _) =>
-      CurveData(c.simplify(0.01f), graft.model.PrecisionType.SemiSpecific, delays.length)
+  def generalDelayCurve(delays: Seq[Float]): Option[CurveData] =
+    unfocusedCurve(delays.length, Runs.of(delays), atLeast = 20, eps = 0.01f, PrecisionType.SemiSpecific)
+
+  def generalDelayCurve(delays: Runs): Option[CurveData] =
+    unfocusedCurve(delays.total, delays, atLeast = 20, eps = 0.01f, PrecisionType.SemiSpecific)
+
+  /** Default-curve leaf build (reference `src/analyser/default_curves.rs:135-160`):
+    * >=10 values per (route_type, section, slot, event), make_curve without
+    * focus, simplify(0.001). */
+  def defaultCurve(delays: Seq[Float]): Option[CurveData] =
+    unfocusedCurve(delays.length, Runs.of(delays), atLeast = 10, eps = 0.001f, PrecisionType.General)
+
+  def defaultCurve(delays: Runs): Option[CurveData] =
+    unfocusedCurve(delays.total, delays, atLeast = 10, eps = 0.001f, PrecisionType.General)
+
+  /** The sample gate runs before the runs are built; sample sizes
+    * saturate at Int.MaxValue instead of wrapping. */
+  private def unfocusedCurve(n: Long, delays: => Runs, atLeast: Int, eps: Float,
+                             precision: Int): Option[CurveData] =
+    if (n < atLeast) None
+    else Curve.makeCurve(delays, None).map { case (c, _) =>
+      CurveData(c.simplify(eps), precision, math.min(n, Int.MaxValue.toLong).toInt)
     }
-  }
 
   /** Stop-pair curve-set build (reference `generate_curves_for_stop_pair`,
-    * `src/analyser/specific_curves.rs:371-426`).
+    * `src/analyser/specific_curves.rs:371-426`) over a pair list; see the
+    * runs overload. */
+  def stopPairCurveSet(pairs: Seq[(Float, Float)]): Option[CurveSetData] =
+    stopPairCurveSet(PairRuns.of(pairs))
+
+  /** Input: (start-stop departure delay, end-stop delay) pairs, already
+    * thresholded and rounded; caller must have checked `total > 20` (F9).
+    * Steps: order pairs; build the initial-delay CDF; compute adaptive
+    * markers (doubled at both ends); for each (lower, mid, upper) marker
+    * window take the pairs at CDF index range [lo, hi) of that order,
+    * build a focused curve on their END delays, simplify(0.001), drop
+    * curves with span < 13 s; sample_size = total slice sizes / number of
+    * curves. A slice's end delays are its overlap with the cumulative run
+    * counts — the multiset a positional slice of the expanded list holds.
     *
-    * Input: (start-stop departure delay, end-stop delay) pairs, already
-    * thresholded and rounded; caller must have checked `pairs.length > 20`
-    * (F9). Steps: sort by start delay; build the initial-delay CDF; compute
-    * adaptive markers (doubled at both ends); for each (lower, mid, upper)
-    * marker window slice pairs by CDF index range, build a focused curve on
-    * the END delays, simplify(0.001), drop curves with span < 13 s;
-    * sample_size = total slice sizes / number of curves. */
-  def stopPairCurveSet(pairs: Seq[(Float, Float)]): Option[CurveSetData] = {
-    // sort by (start, end), not start alone: with 12 s rounding equal
-    // start delays are common, and a start-only (stable) sort would leave
-    // the end-delay order within a tie equal to the COLLECTION order —
-    // which follows shuffle layout. The reference sorts by start only
-    // (`specific_curves.rs:372`), so its tie output is input-order-
-    // dependent too; the full key costs nothing and makes ours
-    // reproducible across partitionings.
-    //
-    // r12 (guide §1.2 step 2): sort and slice over primitive parallel
-    // arrays instead of a Seq of boxed tuples — callers hand this
-    // whatever collection the aggregation produced, and a list-typed
-    // Seq made the downstream positional slicing O(n²). The sort key
-    // is encoded into one Long per pair via the standard IEEE
-    // order-preserving bit trick (sign-flip for non-negatives, full
-    // complement for negatives, applied to both float components):
-    // ascending unsigned-long order == lexicographic
-    // (TotalOrdering(start), TotalOrdering(end)) — the exact order
-    // `sortBy(identity)` realized. Delays are finite 12 s multiples
-    // (never NaN/-0.0), and the total orders agree on those anyway.
-    val count = pairs.length
-    def sortableBits(f: Float): Long = {
-      val b = java.lang.Float.floatToIntBits(f)
-      (if (b >= 0) b ^ 0x80000000 else ~b) & 0xFFFFFFFFL
-    }
-    val keys = new Array[Long](count)
-    val ks = new Array[Float](count)
-    val vs = new Array[Float](count)
-    var i = 0
-    pairs.foreach { p =>
-      keys(i) = (sortableBits(p._1) << 32) | sortableBits(p._2)
-      i += 1
-    }
-    // unsigned order over the encoded key: flip the top bit and use the
-    // JDK's signed primitive sort
-    i = 0
-    while (i < count) { keys(i) = keys(i) ^ Long.MinValue; i += 1 }
-    java.util.Arrays.sort(keys)
-    def unsortableBits(u: Long): Float = {
-      val b = (u & 0xFFFFFFFFL).toInt
-      java.lang.Float.intBitsToFloat(if (b < 0) b ^ 0x80000000 else ~b)
-    }
-    i = 0
-    while (i < count) {
-      val u = keys(i) ^ Long.MinValue
-      ks(i) = unsortableBits(u >>> 32)
-      vs(i) = unsortableBits(u)
-      i += 1
-    }
-    Curve.makeCurve(scala.collection.immutable.ArraySeq.unsafeWrapArray(ks),
-        None).flatMap { case (initialCurve, _) =>
+    * The order is (start, end), not start alone: with 12 s rounding equal
+    * start delays are common, and within a tie a start-only stable sort
+    * keeps the collection order, which follows shuffle layout. The
+    * reference sorts by start only (`specific_curves.rs:372`), so its tie
+    * output depends on input order too; the full key makes ours
+    * reproducible across partitionings. */
+  def stopPairCurveSet(pairs: PairRuns): Option[CurveSetData] = {
+    val count = pairs.total
+    val k = pairs.counts.length
+    // run r covers positions [cum(r), cum(r + 1)) of the expanded order
+    val cum = new Array[Long](k + 1)
+    for (r <- 0 until k) cum(r + 1) = cum(r) + pairs.counts(r)
+    val sliceEnds = new Array[Float](k)
+    val sliceCounts = new Array[Long](k)
+    Curve.makeCurve(Runs.sortedRuns(pairs.starts, pairs.counts, k), None).flatMap { case (initialCurve, _) =>
       val markers = mutable.ArrayBuffer[Float](initialCurve.minX, initialCurve.minX)
       Curve.recurseMarkers(initialCurve, markers, initialCurve.minX, initialCurve.maxX, count.toFloat)
       markers += initialCurve.maxX
       markers += initialCurve.maxX
 
-      var sampleSize = 0
+      var sampleSize = 0L
       val curves = Vector.newBuilder[(Float, Curve)]
       var nCurves = 0
       markers.iterator.sliding(3).withPartial(false).foreach { w =>
         val (lower, mid, upper) = (w(0), w(1), w(2))
-        val minIndex = (count * initialCurve.yAtX(lower)).toInt
-        val maxIndex = (count * initialCurve.yAtX(upper)).toInt
-        val lo = math.max(minIndex, 0)
-        val hi = math.min(maxIndex, count)
-        val sliceLen = math.max(hi - lo, 0)
+        val lo = math.max((count * initialCurve.yAtX(lower)).toLong, 0L)
+        val hi = math.min((count * initialCurve.yAtX(upper)).toLong, count)
+        val sliceLen = math.max(hi - lo, 0L)
         sampleSize += sliceLen
         if (sliceLen > 1) {
-          val slice = java.util.Arrays.copyOfRange(vs, lo, hi)
-          Curve.makeCurve(scala.collection.immutable.ArraySeq
-              .unsafeWrapArray(slice), Some(mid)).foreach { case (c0, _) =>
+          var m = 0
+          var r = java.util.Arrays.binarySearch(cum, lo)
+          r = if (r >= 0) r else -r - 2
+          while (r < k && cum(r) < hi) {
+            val overlap = math.min(cum(r + 1), hi) - math.max(cum(r), lo)
+            if (overlap > 0) { sliceEnds(m) = pairs.ends(r); sliceCounts(m) = overlap; m += 1 }
+            r += 1
+          }
+          Curve.makeCurve(Runs.sortedRuns(sliceEnds, sliceCounts, m), Some(mid)).foreach { case (c0, _) =>
             val c = c0.simplify(0.001f)
             if (c.maxX >= c.minX + 13.0f) {
               curves += ((mid, c))
@@ -117,17 +105,8 @@ object CurveBuilder {
         }
       }
       if (nCurves == 0) None
-      else Some(CurveSetData(CurveSet(curves.result()), graft.model.PrecisionType.Specific, sampleSize / nCurves))
-    }
-  }
-
-  /** Default-curve leaf build (reference `src/analyser/default_curves.rs:135-160`):
-    * >=10 values per (route_type, section, slot, event), make_curve without
-    * focus, simplify(0.001). */
-  def defaultCurve(delays: Seq[Float]): Option[CurveData] = {
-    if (delays.length < 10) return None
-    Curve.makeCurve(delays, None).map { case (c, _) =>
-      CurveData(c.simplify(0.001f), graft.model.PrecisionType.General, delays.length)
+      else Some(CurveSetData(CurveSet(curves.result()), PrecisionType.Specific,
+        math.min(sampleSize / nCurves, Int.MaxValue.toLong).toInt))
     }
   }
 

@@ -43,9 +43,15 @@ object RtIngest {
     * Files without a header timestamp are dropped (the reference errors on
     * them, `per_schedule_importer.rs:111-113`); undecodable files are
     * skipped, not fatal. */
-  def readFeeds(spark: SparkSession, dir: String): Dataset[RtObservation] = {
+  def readFeeds(spark: SparkSession, dir: String): Dataset[RtObservation] =
+    decodeFeeds(spark.read.format("binaryFile").load(dir))
+
+  /** One observation row per stop_time_update of every (path, content)
+    * feed file of a binaryFile relation, batch or streaming alike. */
+  private[graft] def decodeFeeds(files: DataFrame): Dataset[RtObservation] = {
+    val spark = files.sparkSession
     import spark.implicits._
-    spark.read.format("binaryFile").load(dir)
+    files
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
@@ -70,6 +76,11 @@ object RtIngest {
       }
   }
 
+  /** The logical key of a `records` row: one vehicle's one stop, per
+    * source; last-wins merges keep the newest `time_of_recording` per key. */
+  val RecordKey: Seq[String] = Seq("source", "route_id", "route_variant", "trip_id",
+    "trip_start_date", "trip_start_time", "stop_sequence")
+
   /** Build the `records` table (schema: FIXTURES.md §3) from decoded
     * observations and a schedule.
     *
@@ -83,9 +94,7 @@ object RtIngest {
               source: String, scheduleFileName: String): DataFrame = {
     val trips = schedule.tripsWithVariant
       .select(col("trip_id"), col("route_id"), col("route_variant"))
-    val keyCols = Seq("source", "route_id", "route_variant", "trip_id",
-      "trip_start_date", "trip_start_time", "stop_sequence")
-    val w = Window.partitionBy(keyCols.map(col): _*)
+    val w = Window.partitionBy(RecordKey.map(col): _*)
       .orderBy(col("time_of_recording").desc)
     obs.toDF()
       .filter(col("delay_arrival").isNotNull || col("delay_departure").isNotNull)

@@ -141,7 +141,7 @@ object Predictor {
     // SuperGeneral terminal fallback for route types outside the default
     // grid (the reference folds extended GTFS codes into its 11-type enum
     // at parse time; our schema keeps raw ints, so an exotic code could
-    // otherwise miss every grid row — ADVICE r1). Single broadcast row;
+    // otherwise miss every grid row). Single broadcast row;
     // empty when the cascade filled every cell, in which case unmatched
     // route types fail exactly like the reference's `predict_default` bail.
     val sg = defaultCurves

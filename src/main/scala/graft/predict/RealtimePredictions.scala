@@ -14,16 +14,15 @@ import graft.model.{EventType, GtfsTime, OriginType}
 object RealtimePredictions {
 
   /** The STATIC side of the realtime prediction path, materialized once
-    * and reused across micro-batches (r7 verdict task #5: the automatic
-    * mode rebuilt the schedule-derived relations — including
-    * tripsWithVariant's stop-walk aggregation — and re-planned the
-    * statistics joins on EVERY batch). All members are persisted and
-    * eagerly materialized by [[buildContext]]; re-broadcasting per batch
-    * then serializes memory blocks instead of recomputing plans. A
-    * statistics refresh invalidates the whole context: call
+    * and reused across micro-batches, so no batch rebuilds the
+    * schedule-derived relations (tripsWithVariant's stop-walk aggregation
+    * among them) or re-plans the statistics joins. All members are
+    * persisted and eagerly materialized by [[buildContext]]; re-broadcasting
+    * per batch then serializes memory blocks instead of recomputing plans.
+    * A statistics refresh invalidates the whole context: call
     * [[Context.invalidate]] and build a fresh one (the reference's
     * importer likewise reloads its statistics snapshot wholesale,
-    * `/root/reference/src/importer/mod.rs` monitor reload spirit). */
+    * `src/importer/mod.rs`). */
   final case class Context(stops: DataFrame, trips: DataFrame,
                            general: DataFrame, curveSets: DataFrame,
                            defaults: DataFrame, routes: DataFrame) {

@@ -35,7 +35,7 @@ object ScheduledPredictions {
     // scheduled DEPARTURE for both event branches (the GTFS-RT trip
     // descriptor's start_time). Deriving it per event type would give a
     // vehicle two identities whenever the first stop has dwell, breaking the
-    // F6 realtime-shadow dedup and the A12 watermark (ADVICE r1).
+    // F6 realtime-shadow dedup and the A12 watermark.
     val withStops = trips.join(stops, Seq("trip_id"))
       .withColumn("trip_start_time",
         first(col("departure_secs")).over(org.apache.spark.sql.expressions.Window

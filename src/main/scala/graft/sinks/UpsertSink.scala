@@ -114,10 +114,9 @@ object UpsertSink {
     // it three times (emptiness, touched partitions, the merge itself),
     // and an un-materialized batch re-executes its full upstream plan per
     // pass — for the predictions stream that is the whole realtime
-    // ladder. Same-session A/B (PERF.md r7, 2000 vehicles, 5 s
-    // trigger): predictions batch median 9.8 s before, 6.0/7.2 s across
-    // two runs after. Micro-batch-sized, so the materialization itself
-    // is cheap.
+    // ladder (measured in PERF.md: predictions batch median 9.8 s
+    // without it, 6.0-7.2 s with it, 2000 vehicles, 5 s trigger).
+    // Micro-batch-sized, so the materialization itself is cheap.
     val b = ckpt.truncate(batch)
     // An empty micro-batch must write NOTHING: overwriting with an empty
     // frame would still create the table directory without any parquet
@@ -129,7 +128,7 @@ object UpsertSink {
     // ...and existence must mean READABLE data, not just a directory: a
     // crash between mkdir and commit leaves the footer-less state too
     val existing0 =
-      if (!new java.io.File(path).exists()) None
+      if (!graft.GraftSession.pathExists(spark, path)) None
       else try Some(spark.read.parquet(path))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     val merged = if (existing0.isDefined) {
@@ -164,7 +163,7 @@ object UpsertSink {
       .parquet(path)
     // the overwrite is committed: the batch's checkpoint data has no
     // remaining reader — delete it, or a long-running stream accumulates
-    // one directory per micro-batch forever (ADVICE r6)
+    // one directory per micro-batch forever
     ckpt.release()
   }
 
@@ -173,7 +172,6 @@ object UpsertSink {
   def mergeIntoPartitionedRecords(spark: SparkSession, batch: DataFrame,
                                   recordsPath: String): Unit =
     mergeIntoPartitioned(spark, batch, recordsPath,
-      keyCols = Seq("source", "route_id", "route_variant", "trip_id",
-        "trip_start_date", "trip_start_time", "stop_sequence"),
+      keyCols = graft.gtfs.RtIngest.RecordKey,
       versionCol = "time_of_recording", partitionCol = "trip_start_date")
 }

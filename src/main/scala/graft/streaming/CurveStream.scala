@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-import graft.curves.Curve
-import graft.analyse.CurvePoint
+import graft.curves.{CurveBuilder, PairRuns, Runs}
+import graft.analyse.{CurvePoint, DelayAnalysis}
 
 /** §2.8 extension: INCREMENTAL curve maintenance. The reference (and the
   * batch `analyse` pipeline here, SURVEY §3.2) rebuilds delay statistics
@@ -14,10 +14,12 @@ import graft.analyse.CurvePoint
   *
   * The trick that makes streaming maintenance exact rather than
   * approximate: delays are INTEGERS (seconds), so a per-group count
-  * histogram `delay → n` is a lossless sufficient statistic for the
-  * unit-weight ECDF — and [[Curve.makeCurveFromCounts]] rebuilds from it
-  * the bit-identical curve the batch builder gets from the full sample
-  * multiset (spec-pinned). No reservoir, no sketch, no approximation.
+  * histogram `delay → n` is a lossless sufficient statistic — it IS the
+  * run-length multiset the batch builder reduces its sample list to. The
+  * emissions hand it to the [[graft.curves.CurveBuilder]] contracts as
+  * [[graft.curves.Runs]], so streamed curves are the batch curves over the
+  * same observations, for any count (spec-pinned). No reservoir, no
+  * sketch, no approximation.
   *
   * State is BOUNDED by the delay domain, not the observation count: a
   * group's histogram has at most one entry per distinct integer delay
@@ -25,8 +27,7 @@ import graft.analyse.CurvePoint
   * practice), so a year of observations costs the same state as a day —
   * the property that lets the automatic mode run unbounded. Emission is
   * Update-mode: each micro-batch re-emits curves only for groups it
-  * touched, gated by the same ≥ `minSamples` rule (F9) as the batch
-  * builder. */
+  * touched, gated by the builder's sample rule (F9). */
 object CurveStream {
 
   /** One delay observation, already classified (route/variant resolved
@@ -41,35 +42,19 @@ object CurveStream {
 
   private type Key = (String, Long, Int, Int, Int)
 
-  /** Build the A8 general curve from a histogram: ≥ minSamples values,
-    * makeCurve without focus, simplify(0.01), SemiSpecific — the
-    * [[graft.curves.CurveBuilder.generalDelayCurve]] contract, fed from
-    * counts. */
-  private[streaming] def curveFromHistogram(key: Key, h: Map[Int, Long],
-                                            minSamples: Int)
-  : Option[CurveUpdate] = {
-    val n = h.valuesIterator.sum
-    if (n < minSamples) None
-    else Curve.makeCurveFromCounts(
-      h.iterator.map { case (d, c) => (d.toFloat, c) }.toSeq)
-      .map { case (c, _) =>
-        CurveUpdate(key._1, key._2, key._3, key._4, key._5,
-          graft.model.PrecisionType.SemiSpecific,
-          // saturate, don't wrap: past 2^31 lifetime observations the
-          // reported size pins at MaxValue (and past 2^24 the bit-equality
-          // claim vs the expansion relaxes to the last float ulp — the
-          // inherent resolution of a float ECDF at that mass; r7 review)
-          math.min(n, Int.MaxValue.toLong).toInt,
-          c.simplify(0.01f).points.map(p => CurvePoint(p._1, p._2)))
+  /** The group's general curve over its delay histogram. */
+  private def generalUpdate(key: Key, h: Map[Int, Long]): Option[CurveUpdate] =
+    CurveBuilder.generalDelayCurve(Runs.fromCounts(h.toSeq.map { case (d, c) => (d.toFloat, c) }))
+      .map { cd =>
+        CurveUpdate(key._1, key._2, key._3, key._4, key._5, cd.precisionType,
+          cd.sampleSize, cd.curve.points.map(p => CurvePoint(p._1, p._2)))
       }
-  }
 
   /** Continuous general-curve maintenance over an observation stream.
     * One stateful shuffle keyed by curve group; per batch each touched
     * group folds its new delays into the histogram and re-emits its
-    * curve when it has reached `minSamples`. */
-  def generalCurveStream(obs: Dataset[DelayObs],
-                         minSamples: Int = 20): Dataset[CurveUpdate] = {
+    * curve once it passes the sample gate. */
+  def generalCurveStream(obs: Dataset[DelayObs]): Dataset[CurveUpdate] = {
     val spark = obs.sparkSession
     import spark.implicits._
     obs
@@ -84,7 +69,7 @@ object CurveStream {
           rows.foreach(o => h(o.delay) = h.getOrElse(o.delay, 0L) + 1L)
           val m = h.toMap
           state.update(m)
-          curveFromHistogram(key, m, minSamples).iterator
+          generalUpdate(key, m).iterator
         })
   }
 
@@ -104,15 +89,14 @@ object CurveStream {
   /** Incremental A7: continuous stop-pair curve-SET maintenance. Pair
     * delays arrive rounded to 12 s multiples (the F2/F3 contract), so the
     * (slot, start, end) COUNT histogram is again a lossless sufficient
-    * statistic; emission expands the histogram and runs the SAME build
-    * body as the batch aggregate
-    * ([[graft.analyse.DelayAnalysis.buildPairCurveSets]]) — input order
-    * is irrelevant because the builder sorts, so streamed curve sets are
-    * bit-equal to the offline build over the same observations
-    * (spec-pinned). State per group is bounded by the distinct
-    * (slot, start, end) domain (≤ slots × 499² under F2/F3, a few
-    * hundred in practice); the transient expansion at emission is the
-    * same group multiset the batch builder holds. */
+    * statistic. Emission splits it into the batch aggregate's slot groups
+    * ([[graft.analyse.DelayAnalysis.slotGroups]]) and builds each group's
+    * [[graft.curves.PairRuns]] straight from the counts, so streamed curve
+    * sets equal the offline build over the same observations
+    * (spec-pinned), and an emission costs O(distinct pairs), not
+    * O(observations). State per group is bounded by the distinct
+    * (slot, start, end) domain (≤ slots × 499² under F2/F3, a few hundred
+    * in practice). */
   def pairCurveStream(obs: Dataset[PairObs]): Dataset[CurveSetUpdate] = {
     val spark = obs.sparkSession
     import spark.implicits._
@@ -129,20 +113,11 @@ object CurveStream {
             h(k) = h.getOrElse(k, 0L) + 1L
           }
           state.update(h.toArray)
-          // transient expansion: the SAME group multiset the batch builder
-          // holds — per-emission cost is O(lifetime observations of this
-          // group). Deployments with unbounded per-group volume should
-          // window the key (slot taxonomy already bounds it in practice)
-          // or age state out; a count that no longer fits an Int cannot
-          // expand — fail loudly rather than silently truncate (r7 review)
-          val all = h.iterator.flatMap { case ((slot, sd, ed), c) =>
-            require(c <= Int.MaxValue,
-              s"pairCurveStream: count $c for ($slot, $sd, $ed) exceeds " +
-                "Int.MaxValue — the group multiset can no longer be expanded")
-            Iterator.fill(c.toInt)((slot, sd, ed))
-          }.toSeq
-          graft.analyse.DelayAnalysis.buildPairCurveSets(all).iterator
-            .map { case (slot, pt, n, curves) =>
+          val groups = DelayAnalysis.slotGroups(h.toSeq.map { case ((slot, sd, ed), c) =>
+            (slot, ((sd, ed), c))
+          })
+          DelayAnalysis.pairCurveSets(groups.map { case (slot, es) => (slot, PairRuns.fromCounts(es)) })
+            .iterator.map { case (slot, pt, n, curves) =>
               CurveSetUpdate(key._1, key._2, key._3, key._4, slot,
                 key._5, pt, n, curves)
             }
@@ -152,8 +127,8 @@ object CurveStream {
   /** Batch twin for verification and backfill: the same histogram → curve
     * path over a static DataFrame of observations. The streaming operator
     * must converge to exactly this after any batch split (spec-pinned),
-    * and it must equal the batch builder's expansion-based curve. */
-  def generalCurvesBatch(obs: DataFrame, minSamples: Int = 20): DataFrame = {
+    * and it must equal the batch builder's curve. */
+  def generalCurvesBatch(obs: DataFrame): DataFrame = {
     val spark = obs.sparkSession
     import spark.implicits._
     obs.select(col("route_id"), col("route_variant"), col("stop_index"),
@@ -166,7 +141,7 @@ object CurveStream {
         rows.foreach(o => h(o.delay) = h.getOrElse(o.delay, 0L) + 1L)
         (key, h.toMap)
       }
-      .flatMap { case (key, h) => curveFromHistogram(key, h, minSamples) }
+      .flatMap { case (key, h) => generalUpdate(key, h) }
       .toDF()
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.gtfs.{GtfsRt, GtfsStatic, RtIngest}
+import graft.gtfs.{GtfsStatic, RtIngest}
 
 /** The reference's `import automatic` mode (SURVEY.md §2.8 — a hand-rolled
   * 5-second directory poller, `src/importer/mod.rs:30,295-460`) as
@@ -38,41 +38,25 @@ object RtStream {
       route_id: String, basis_stop_sequence: Int, basis_delay: Option[Int],
       time_of_recording: Long)
 
-  /** Streaming decode: one observation row per stop_time_update, exactly
-    * like `RtIngest.readFeeds` but on a stream. */
+  /** Streaming decode: one observation row per stop_time_update, the
+    * same decode as `RtIngest.readFeeds` on a stream. A corrupt file gives
+    * zero rows, never a dead stream (the reference quarantines it into
+    * `failed/` and continues). */
   def observations(spark: SparkSession, dir: String,
                    archiveDir: Option[String] = None): Dataset[RtIngest.RtObservation] = {
-    import spark.implicits._
     val base = spark.readStream.format("binaryFile")
     // the reference moves processed files to `imported/`
     // (`src/importer/mod.rs:523-555`); cleanSource=archive is the
     // streaming-source equivalent
     val withArchive = archiveDir.fold(base)(a =>
       base.option("cleanSource", "archive").option("sourceArchiveDir", a))
-    withArchive
+    RtIngest.decodeFeeds(withArchive
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("path", org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("modificationTime", org.apache.spark.sql.types.TimestampType),
         org.apache.spark.sql.types.StructField("length", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("content", org.apache.spark.sql.types.BinaryType))))
-      .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val fileName = path.substring(path.lastIndexOf('/') + 1)
-        for {
-          // corrupt file -> zero rows, never a dead stream (reference
-          // quarantines into failed/ and continues)
-          msg <- RtIngest.decodeOrEmpty(bytes, path).toSeq
-          ts <- msg.headerTimestamp.toSeq
-          tu <- msg.tripUpdates
-          tripId <- tu.trip.tripId.toSeq
-          stu <- tu.stopTimeUpdates
-        } yield RtIngest.RtObservation(fileName, ts, tripId,
-          tu.trip.routeId, tu.trip.startDate, tu.trip.startTime,
-          stu.stopSequence, stu.stopId,
-          stu.arrival.flatMap(_.delay), stu.departure.flatMap(_.delay))
-      }
+      .load(dir))
   }
 
   /** Reduce a micro-batch of observations to one latest-position update per
@@ -153,21 +137,6 @@ object RtStream {
       .select(col("window.start").as("window_start"), col("route_id"),
         col("n_updates"), col("avg_delay_departure"), col("max_delay_departure"))
 
-  /** Batch-side last-wins merge (W2): combine a micro-batch with the
-    * existing records table, keep the newest time_of_recording per logical
-    * key. Used inside foreachBatch; also the batch-mode compaction. */
-  def mergeRecords(existing: DataFrame, batch: DataFrame): DataFrame = {
-    val keyCols = Seq("source", "route_id", "route_variant", "trip_id",
-      "trip_start_date", "trip_start_time", "stop_sequence")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col("time_of_recording").desc)
-    existing.unionByName(batch)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-  }
-
   /** The COMPLETE automatic mode (§3.1 end to end): alongside the records
     * sink of [[start]], a second streaming query turns the same feed
     * directory into vehicle updates → stateful basis dedup → realtime
@@ -194,9 +163,9 @@ object RtStream {
       s"$checkpointBase/records", source, scheduleFileName, trigger)
     val predKey = Seq("route_id", "trip_id", "trip_start_date",
       "trip_start_time", "stop_sequence", "event_type")
-    // the static prediction side is materialized ONCE, not per batch
-    // (r7: the per-batch rebuild of schedule/statistics relations was
-    // ~1-2 s of the 6-7 s batch median). Deployments that refresh their
+    // the static prediction side is materialized ONCE, not per batch:
+    // rebuilding the schedule/statistics relations per batch cost ~1-2 s
+    // of a 6-7 s batch median (PERF.md). Deployments that refresh their
     // statistics pass `context` and own its lifecycle: build the new
     // one, restart the query, invalidate() the old.
     val ctx = context.getOrElse(

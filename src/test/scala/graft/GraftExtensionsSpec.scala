@@ -36,7 +36,7 @@ class GraftExtensionsSpec extends SparkSpec {
     import spark.implicits._
     // parquet round-trip: a literal LocalRelation would be constant-folded
     // before the plan can be inspected
-    val dir = java.nio.file.Files.createTempDirectory("graft-isz").toString
+    val dir = tempDir("graft-isz").toString
     Seq(
       (0L, Seq("a", "b", "c", "b"), Seq("b", "c", "d")),
       (1L, Seq.empty[String], Seq("x")),

@@ -10,7 +10,7 @@ import java.nio.file.Files
 class GraftFacadeSpec extends SparkSpec {
 
   test("import -> analyse -> predict through the Graft facade") {
-    val statsDir = Files.createTempDirectory("graft_stats").toString
+    val statsDir = tempDir("graft_stats").toString
 
     // import manual (one schedule version)
     val records = Graft.importFeeds(spark,

@@ -29,6 +29,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
+  private val tempDirs = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+
+  /** A fresh temp directory, deleted with its contents after the suite. */
+  protected def tempDir(prefix: String): java.nio.file.Path = tempDirs.synchronized {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.synchronized(tempDirs.foreach(SparkSpec.deleteTree)) finally super.afterAll()
+
   /** Recursive copy, used by the streamed-store crash specs to stash
     * and restore delta partitions around a compaction (reconstructing
     * the on-disk state of a specific crash interleaving). */
@@ -47,4 +59,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = GraftSession.local(4)
+
+  /** Delete `root` and everything under it; an absent root is a no-op. */
+  def deleteTree(root: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(root)) {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally walk.close()
+    }
 }

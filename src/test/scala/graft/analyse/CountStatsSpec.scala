@@ -16,7 +16,7 @@ class CountStatsSpec extends SparkSpec {
       (Timestamp.valueOf("2024-03-15 09:30:00"), None))        // null kept, not averaged
       .toDF("time_of_recording", "delay_arrival")
 
-    val rtDir = Files.createTempDirectory("count_rt")
+    val rtDir = tempDir("count_rt")
     Files.write(rtDir.resolve("feed_2024-03-15T08-15-00.pb"), Array[Byte](1, 2, 3))
     Files.write(rtDir.resolve("feed_2024-03-15T08-45-00.pb"), Array[Byte](4, 5))
     Files.write(rtDir.resolve("feed_2024-03-15T09-05-00.pb"), Array[Byte](6))
@@ -34,7 +34,7 @@ class CountStatsSpec extends SparkSpec {
     assert(h9.getAs[Double]("avg") == 30.0)
     assert(h9.getAs[Long]("files") == 1)
 
-    val out = Files.createTempDirectory("count_csv")
+    val out = tempDir("count_csv")
     CountStats.writeCsv(CountStats.run(records, Some(rtDir.toString), 3600),
       out.resolve("report").toString)
     val csv = spark.read.option("sep", ";").option("header", "true")

@@ -17,7 +17,7 @@ class StatisticsIOSpec extends SparkSpec {
   private lazy val schedule = GtfsStatic.read(spark, "fixtures/gtfs_tiny")
 
   private lazy val fixtureDir = {
-    val dir = Files.createTempDirectory("stats_io").toString
+    val dir = tempDir("stats_io").toString
     StatisticsIO.computeAndSave(GtfsPipeline.records(spark), schedule, dir)
     dir
   }
@@ -52,7 +52,7 @@ class StatisticsIOSpec extends SparkSpec {
     def row(route: String, n: Int) = GeneralCurveRow(route, 1L, 1, EventType.Arrival,
       TimeSlot.Default.id, PrecisionType.SemiSpecific, n,
       Seq(CurvePoint(0f, 0f), CurvePoint(60f, 1f)))
-    val dir = Files.createTempDirectory("stats_numeric").toString
+    val dir = tempDir("stats_numeric").toString
     StatisticsIO.save(dir, Seq(row("07", 30), row("7", 40)).toDF(),
       spark.emptyDataset[CurveSetRow].toDF(), spark.emptyDataset[DefaultCurveRow].toDF())
     val stats = StatisticsIO.load(spark, dir)
@@ -75,7 +75,7 @@ class StatisticsIOSpec extends SparkSpec {
         "stop_sequence", "stop_id", "time_of_recording", "delay_arrival", "delay_departure")
       .join(GtfsStatic.routeVariants(schedule.trips, schedule.stopTimes), Seq("trip_id"))
     val stats = StatisticsIO.computeAndSave(records, schedule,
-      Files.createTempDirectory("stats_empty").toString)
+      tempDir("stats_empty").toString)
     assert(stats.general.count() == 0)
     assert(stats.curveSets.count() == 0)
     assert(stats.defaults.count() == 0)

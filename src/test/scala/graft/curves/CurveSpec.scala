@@ -212,6 +212,56 @@ class CurveSpec extends AnyFunSuite with graft.GenSampling {
     }
   }
 
+  // ── the one ECDF loop over runs ──
+
+  test("runs: counts past 2^24 give the expanded loop's curve and weight sum") {
+    // an f32 running sum of ones stops at 2^24, so the expanded loop gives
+    // y(2.0) = 1.0 and sumW = 2^24, not (2^24 + 1) / (2^24 + 2)
+    val big = 1 << 24
+    val runs = Runs.fromCounts(Seq((1.0f, big.toLong), (2.0f, 1L), (3.0f, 1L)))
+    val expanded = new Array[Float](big + 2)
+    java.util.Arrays.fill(expanded, 0, big, 1.0f)
+    expanded(big) = 2.0f
+    expanded(big + 1) = 3.0f
+    val want = Curve.makeCurve(scala.collection.immutable.ArraySeq.unsafeWrapArray(expanded), None)
+    val got = Curve.makeCurve(runs, None)
+    assert(got == want)
+    assert(got.get._2 == 16777216.0f)
+    assert(got.get._1.yAtX(2.0f) == 1.0f)
+  }
+
+  test("runs-fed stopPairCurveSet == the Seq build, incl. runs straddling a slice boundary") {
+    val rng = new scala.util.Random(17)
+    var built = 0
+    var straddles = 0
+    for (trial <- 0 until 60) {
+      // few distinct 12 s-rounded pairs with large counts: long runs that
+      // the marker slices cut through
+      val hist = Seq.fill(3 + rng.nextInt(25)) {
+        val s = ((rng.nextInt(21) - 10) * 12).toFloat
+        ((s, s + ((rng.nextInt(11) - 5) * 12).toFloat), 1L + rng.nextInt(40))
+      }
+      val runs = PairRuns.fromCounts(hist)
+      val expanded = rng.shuffle(hist.flatMap { case (p, c) => Seq.fill(c.toInt)(p) })
+      val got = CurveBuilder.stopPairCurveSet(runs)
+      assert(got == CurveBuilder.stopPairCurveSet(expanded), s"trial $trial")
+      if (got.isDefined) built += 1
+      // marker slice boundaries that fall strictly inside a run
+      val count = runs.total
+      val cum = runs.counts.scanLeft(0L)(_ + _).toSet
+      Curve.makeCurve(expanded.map(_._1), None).foreach { case (ic, _) =>
+        val markers = scala.collection.mutable.ArrayBuffer[Float](ic.minX)
+        Curve.recurseMarkers(ic, markers, ic.minX, ic.maxX, count.toFloat)
+        markers += ic.maxX
+        straddles += markers.count { m =>
+          val idx = (count * ic.yAtX(m)).toLong
+          idx > 0 && idx < count && !cum.contains(idx)
+        }
+      }
+    }
+    assert(built > 30 && straddles > 30, s"built $built, straddles $straddles")
+  }
+
   // ── property tests ──
 
   private val valuesGen: Gen[List[Float]] =

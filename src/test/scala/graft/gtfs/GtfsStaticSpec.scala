@@ -16,6 +16,13 @@ class GtfsStaticSpec extends SparkSpec {
     assert(schedule.calendarDates.count() == 2)
   }
 
+  test("optional tables load through a file: URI") {
+    val uri = java.nio.file.Paths.get("fixtures/gtfs_tiny").toAbsolutePath.toUri.toString
+    val s = GtfsStatic.read(spark, uri.stripSuffix("/"))
+    assert(s.calendar.count() == 3)
+    assert(s.calendarDates.count() == 2)
+  }
+
   test("route_variant: same stop sequence -> same id; sub-sequence -> different") {
     val v = schedule.tripsWithVariant
       .select("trip_id", "route_variant").collect()

@@ -17,7 +17,7 @@ class MultiScheduleSpec extends SparkSpec {
   }
 
   test("records are built against the as-of-matched schedule version") {
-    val base = Files.createTempDirectory("multi_sched")
+    val base = tempDir("multi_sched")
     val v1 = base.resolve("sched_2024-03-01")
     val v2 = base.resolve("sched_2024-03-20")
     copySchedule(v1)
@@ -29,7 +29,7 @@ class MultiScheduleSpec extends SparkSpec {
     lines.forEach(l => if (!(l.startsWith("tA1") && l.endsWith(",4"))) filtered.add(l))
     Files.write(st, filtered)
 
-    val rtDir = Files.createTempDirectory("multi_rt")
+    val rtDir = tempDir("multi_rt")
     def feed(name: String, ts: Long): Unit =
       Files.write(rtDir.resolve(name), GtfsRt.encode(GtfsRt.FeedMessage(Some(ts), Seq(
         GtfsRt.TripUpdate(

@@ -23,7 +23,7 @@ class RtIngestSpec extends SparkSpec {
       startTime = Some("08:00:00"), startDate = Some("20240315")), updates)
 
   private lazy val rtDir: Path = {
-    val dir = Files.createTempDirectory("rt_tiny")
+    val dir = tempDir("rt_tiny")
     // t=1000: tA1 delays at stops 1,2; unknown trip; event with no delay at stop 3
     Files.write(dir.resolve("feed_2024-03-15T08-10-00.pb"), feed(1000L,
       trip("tA1",
@@ -48,7 +48,7 @@ class RtIngestSpec extends SparkSpec {
     source = "test", scheduleFileName = "gtfs_tiny.zip").cache()
 
   test("corrupt feed files are skipped, not fatal") {
-    val dir = Files.createTempDirectory("rt_bad")
+    val dir = tempDir("rt_bad")
     Files.write(dir.resolve("good_2024-03-15T08-10-00.pb"), feed(1000L,
       trip("tA1", stu(1, "s1", Some(60), Some(90)))))
     // garbage bytes and a truncated valid feed, both undecodable

@@ -104,7 +104,7 @@ class MonitorSpec extends SparkSpec {
   }
 
   test("the board scans a parquet predictions table once") {
-    val path = Files.createTempDirectory("board_preds").resolve("p").toString
+    val path = tempDir("board_preds").resolve("p").toString
     predictions.write.parquet(path)
     val board = Monitor.departureBoard(spark.read.parquet(path),
       schedule.trips, schedule.routes, schedule.stopTimes,

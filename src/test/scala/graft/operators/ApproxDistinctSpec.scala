@@ -44,7 +44,7 @@ class ApproxDistinctSpec extends SparkSpec {
     import spark.implicits._
     val tiny = Seq((1L, "x"), (2L, "x"), (2L, "x"), (3L, "y"))
       .toDF("l_orderkey", "l_returnflag")
-    val dir = java.nio.file.Files.createTempDirectory("graft-kmv").toString
+    val dir = tempDir("graft-kmv").toString
     // reuse the registry build against a synthetic lineitem projection
     val kmv = org.apache.spark.sql.functions.udaf(
       new graft.functions.KmvSketch(64),

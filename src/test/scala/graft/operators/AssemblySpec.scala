@@ -174,7 +174,7 @@ class AssemblySpec extends SparkSpec {
 
   test("q89 then q90 share one bpeTrain run per corpus snapshot") {
     import spark.implicits._
-    val sf = java.nio.file.Files.createTempDirectory("graft-bpe-sf")
+    val sf = tempDir("graft-bpe-sf")
     def writeCorpus(texts: Seq[String]): Unit =
       texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
         .toDF("doc_id", "text").coalesce(1)

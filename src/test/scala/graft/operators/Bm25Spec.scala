@@ -75,7 +75,7 @@ class Bm25Spec extends SparkSpec {
       (1001L, "v5 unseen2 v6")).toDF("doc_id", "text")
 
     val live = CurationQueries.buildBm25Index(corpus)
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val dir = tempDir("graft-bm25").toString
     live.tf.write.parquet(s"$dir/tf")
     live.df.write.parquet(s"$dir/df")
     live.totals.write.parquet(s"$dir/totals")

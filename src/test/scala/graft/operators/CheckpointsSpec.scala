@@ -15,7 +15,7 @@ class CheckpointsSpec extends SparkSpec {
     * public in bytecode. */
   private def withCheckpointDir[T](f: => T): T = {
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val dir = tempDir("graft-ckpt")
     sc.setCheckpointDir(dir.toString)
     try f
     finally sc.getClass
@@ -75,8 +75,7 @@ class CheckpointsSpec extends SparkSpec {
   test("mergeIntoPartitioned leaves no checkpoint data after the commit") {
     import spark.implicits._
     withCheckpointDir {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-upsert-ckpt").resolve("t").toString
+      val path = tempDir("graft-upsert-ckpt").resolve("t").toString
       def batch(v: Long) = Seq((1L, "a", v, "d1"), (2L, "b", v, "d1"))
         .toDF("k", "payload", "ver", "day")
       UpsertSink.mergeIntoPartitioned(spark, batch(1), path,

@@ -80,7 +80,7 @@ class PipelineQueriesSpec extends SparkSpec {
       (1L, "window a b c d e f g", "en", "s", 8L),
       (2L, "p q r s t u", "en", "s", 6L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25").toString
+    val dir = tempDir("graft-bm25").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = PipelineQueries.registry("q58_bm25").build(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -154,7 +154,7 @@ class PipelineQueriesSpec extends SparkSpec {
       (1L, "training doc with the evaluation benchmark inside", "en", "srcX", 49L),
       (2L, "completely unrelated words here", "en", "srcX", 31L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-decon").toString
+    val dir = tempDir("graft-decon").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = PipelineQueries.registry("q61_decontaminate").build(spark, dir)
       .collect().map(r => r.getLong(0)).toSet
@@ -167,7 +167,7 @@ class PipelineQueriesSpec extends SparkSpec {
       (0L, "a b c a b c a b c", "en", "s", 17L), // trigram "a b c" repeats
       (1L, "one two three four five six", "en", "s", 27L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-rep").toString
+    val dir = tempDir("graft-rep").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = PipelineQueries.registry("q62_repetition").build(spark, dir)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
@@ -201,7 +201,7 @@ class PipelineQueriesSpec extends SparkSpec {
       (1L, "a b", "en", "s", 3L),
       (2L, "c c", "en", "s", 3L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
+    val dir = tempDir("graft-lm").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = PipelineQueries.registry("q72_bigram_lm_score").build(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
@@ -221,7 +221,7 @@ class PipelineQueriesSpec extends SparkSpec {
       (1L, "server 10.0.0.1 and 192.168.255.254 plus id 12345678", "en", "s", 1L),
       (2L, "nothing sensitive here just words and 123 456", "en", "s", 1L)
     ).toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pii").toString
+    val dir = tempDir("graft-pii").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = PipelineQueries.registry("q73_pii_scrub").build(spark, dir)
       .collect().map(r => r.getLong(0) ->
@@ -276,7 +276,7 @@ class PipelineQueriesSpec extends SparkSpec {
       (2L, (0 until 40).map(i => s"other$i").mkString(" "), "s"))
       .map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-span").toString
+    val dir = tempDir("graft-span").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = PipelineQueries.registry("q69_substring_overlap").build(spark, dir)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2))).toMap

@@ -52,7 +52,7 @@ class TrendProbeSpec extends SparkSpec {
       Seq.fill(80)(("A", at(25))) ++
       (0 until 26).flatMap(h => Seq.fill(5)(("B", at(h)))) ++
       Seq.fill(50)(("B", at(26)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-anom").toString
+    val dir = tempDir("graft-anom").toString
     rows.zipWithIndex
       .map { case ((t, ts), i) => (i.toLong, ts, i.toLong % 7, t, 1.0, "p") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -181,7 +181,7 @@ class TrendProbeSpec extends SparkSpec {
     import spark.implicits._
     val tiny = (1 to 20).map(i => (100L + i, i, (i * 10).toDouble, "Z"))
       .toDF("l_orderkey", "l_linenumber", "l_extendedprice", "l_returnflag")
-    val dir = java.nio.file.Files.createTempDirectory("graft-qsk").toString
+    val dir = tempDir("graft-qsk").toString
     tiny.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val z = RelationalQueries.registry("q122_quantile_sketch").build(spark, dir)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).head

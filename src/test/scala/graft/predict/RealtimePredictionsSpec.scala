@@ -17,7 +17,7 @@ class RealtimePredictionsSpec extends SparkSpec {
   private lazy val schedule = GtfsStatic.read(spark, "fixtures/gtfs_tiny")
 
   private lazy val stats = {
-    val dir = Files.createTempDirectory("rt_stats").toString
+    val dir = tempDir("rt_stats").toString
     StatisticsIO.computeAndSave(GtfsPipeline.records(spark), schedule, dir)
   }
 

@@ -28,7 +28,7 @@ class ScheduledPredictionsSpec extends SparkSpec {
       "trip_start_time", "stop_sequence", "stop_id", "time_of_recording",
       "delay_arrival", "delay_departure")
       .join(GtfsStatic.routeVariants(schedule.trips, schedule.stopTimes), Seq("trip_id"))
-    val dir = Files.createTempDirectory("stats").toString
+    val dir = tempDir("stats").toString
     StatisticsIO.computeAndSave(records, schedule, dir)
   }
 

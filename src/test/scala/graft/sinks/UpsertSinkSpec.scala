@@ -11,7 +11,7 @@ import java.nio.file.Files
 class UpsertSinkSpec extends SparkSpec {
 
   private def derbyUrl(name: String) = {
-    val dir = Files.createTempDirectory("derby").toString
+    val dir = tempDir("derby").toString
     s"jdbc:derby:$dir/$name;create=true"
   }
 
@@ -91,7 +91,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("partitioned merge: null partition values still merge last-wins") {
     import spark.implicits._
-    val path = Files.createTempDirectory("recs_null").toString + "/records"
+    val path = tempDir("recs_null").toString + "/records"
     def batch(delay: Int, tor: Long) =
       Seq(("tN", Option.empty[java.sql.Date], 1, delay, new java.sql.Timestamp(tor * 1000)))
         .toDF("trip_id", "trip_start_date", "stop_sequence", "delay_arrival",
@@ -109,7 +109,7 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("partitioned merge survives empty batches and a parquet-less table dir") {
     import spark.implicits._
-    val path = Files.createTempDirectory("recs_empty").toString + "/records"
+    val path = tempDir("recs_empty").toString + "/records"
     def batch(rows: Seq[(String, Int, Long)]) =
       rows.toDF("trip_id", "stop_sequence", "tor")
         .select(col("trip_id"), col("stop_sequence"),
@@ -132,9 +132,26 @@ class UpsertSinkSpec extends SparkSpec {
     assert(out.length == 1 && out.head.getAs[String]("trip_id") == "t1")
   }
 
+  test("partitioned merge into a file: URI reads the rows already there") {
+    import spark.implicits._
+    val path = tempDir("recs_uri").toUri.toString + "records"
+    def batch(stop: Int) =
+      Seq(("tU", stop, 100L)).toDF("trip_id", "stop_sequence", "tor")
+        .select(col("trip_id"), col("stop_sequence"),
+          (col("tor") * 1000).cast("timestamp").as("time_of_recording"))
+        .withColumn("trip_start_date", lit(java.sql.Date.valueOf("2024-03-15")))
+        .withColumn("source", lit("s")).withColumn("route_id", lit("r"))
+        .withColumn("route_variant", lit(1L))
+        .withColumn("trip_start_time", lit(0))
+    UpsertSink.mergeIntoPartitionedRecords(spark, batch(1), path)
+    // same service day: the merge must keep stop 1, not overwrite the day
+    UpsertSink.mergeIntoPartitionedRecords(spark, batch(2), path)
+    assert(spark.read.parquet(path).count() == 2)
+  }
+
   test("partitioned merge rewrites only the touched trip_start_date partitions") {
     import spark.implicits._
-    val path = Files.createTempDirectory("recs").toString + "/records"
+    val path = tempDir("recs").toString + "/records"
     def mkBatch(rows: Seq[(String, java.sql.Date, Int, Int, java.sql.Timestamp)]) =
       rows.toDF("trip_id", "trip_start_date", "stop_sequence", "delay_arrival",
           "time_of_recording")

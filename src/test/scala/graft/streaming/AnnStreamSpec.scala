@@ -49,7 +49,7 @@ class AnnStreamSpec extends SparkSpec {
     val b1 = (200L until 220L).map(i =>
       (i, member((i % 12).toInt, (i / 12).toInt))) :+
       (250L, Seq.fill(8)(5f))
-    val path = java.nio.file.Files.createTempDirectory("graft-ann-stream")
+    val path = tempDir("graft-ann-stream")
       .resolve("ix").toString
 
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
@@ -116,7 +116,7 @@ class AnnStreamSpec extends SparkSpec {
     val batches = (0 until 4).map(b =>
       (100L + b * 20L until 100L + (b + 1) * 20L).map(i =>
         (i, member((i % 7).toInt, (i / 7).toInt))))
-    val path = java.nio.file.Files.createTempDirectory("graft-ann-auto")
+    val path = tempDir("graft-ann-auto")
       .resolve("ix").toString
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
     val sink = AnnStream.annIndexSink(path, Occ, autoCompactEvery = 2)
@@ -143,7 +143,7 @@ class AnnStreamSpec extends SparkSpec {
   test("the sink fails the batch when a compaction flips the base version mid-batch") {
     val base = (0L until 40L).map(i => (i, member((i % 5).toInt, (i / 5).toInt)))
     val b0 = (100L until 110L).map(i => (i, member((i % 7).toInt, (i / 7).toInt)))
-    val path = java.nio.file.Files.createTempDirectory("graft-ann-flip")
+    val path = tempDir("graft-ann-flip")
       .resolve("ix").toString
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
     // emulate a compaction racing the sink (quiet-boundary BREACH): a
@@ -169,7 +169,7 @@ class AnnStreamSpec extends SparkSpec {
   test("a compaction crash before delta retirement never duplicates candidates") {
     val base = (0L until 40L).map(i => (i, member((i % 5).toInt, (i / 5).toInt)))
     val b0 = (100L until 110L).map(i => (i, member((i % 7).toInt, (i / 7).toInt)))
-    val root = java.nio.file.Files.createTempDirectory("graft-ann-crash")
+    val root = tempDir("graft-ann-crash")
     val path = root.resolve("ix").toString
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
     AnnStream.annIndexSink(path)(vecsDF(b0), 0L)
@@ -208,7 +208,7 @@ class AnnStreamSpec extends SparkSpec {
     val base = (0L until 30L).map(i => (i, member((i % 4).toInt, (i / 4).toInt)))
     val b0 = (100L until 110L).map(i => (i, member((i % 6).toInt, (i / 6).toInt)))
     val b1 = (200L until 210L).map(i => (i, member((i % 8).toInt, (i / 8).toInt)))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ann-realstream")
+    val dir = tempDir("graft-ann-realstream")
     val path = dir.resolve("ix").toString
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
     implicit val sqlCtx = spark.sqlContext
@@ -234,7 +234,7 @@ class AnnStreamSpec extends SparkSpec {
     // crashed batch's vectors survive into the index after replay
     val b1 = (200L until 210L).map(i =>
       (i, member((i % 9).toInt, (i / 9).toInt))) :+ (250L, Seq.fill(8)(5f))
-    val path = java.nio.file.Files.createTempDirectory("graft-ann-sinkcrash")
+    val path = tempDir("graft-ann-sinkcrash")
       .resolve("ix").toString
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
     val sink = AnnStream.annIndexSink(path)
@@ -269,7 +269,7 @@ class AnnStreamSpec extends SparkSpec {
     val b0 = (100L until 110L).map(i => (i, member((i % 7).toInt, (i / 7).toInt)))
     val b1 = (200L until 210L).map(i =>
       (i, member((i % 9).toInt, (i / 9).toInt))) :+ (250L, Seq.fill(8)(5f))
-    val path = java.nio.file.Files.createTempDirectory("graft-ann-partial")
+    val path = tempDir("graft-ann-partial")
       .resolve("ix").toString
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
     val sink = AnnStream.annIndexSink(path)
@@ -305,7 +305,7 @@ class AnnStreamSpec extends SparkSpec {
     val b0 = (100L until 110L).map(i => (i, member((i % 7).toInt, (i / 7).toInt)))
     val b1 = (200L until 210L).map(i =>
       (i, member((i % 9).toInt, (i / 9).toInt))) :+ (250L, Seq.fill(8)(5f))
-    val path = java.nio.file.Files.createTempDirectory("graft-ann-regress")
+    val path = tempDir("graft-ann-regress")
       .resolve("ix").toString
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
     val sink = AnnStream.annIndexSink(path)
@@ -333,7 +333,7 @@ class AnnStreamSpec extends SparkSpec {
   test("deconProbe: store-backed decontamination == offline indexed build; planted twin flagged") {
     val base = (0L until 60L).map(i => (i, member((i % 6).toInt, (i / 6).toInt)))
     val b0 = (100L until 130L).map(i => (i, member((i % 10).toInt, (i / 10).toInt)))
-    val path = java.nio.file.Files.createTempDirectory("graft-ann-decon")
+    val path = tempDir("graft-ann-decon")
       .resolve("ix").toString
     AnnStream.initAnnIndexStore(vecsDF(base), path, Occ)
     AnnStream.annIndexSink(path)(vecsDF(b0), 0L)

@@ -70,7 +70,7 @@ class AnomalyStreamSpec extends SparkSpec {
     // batch side: the registered q118 over the same rows INCLUDING the
     // watermark pusher, so both engines densify the same hour axis;
     // compare on the hours the stream actually closed (< pusher hour)
-    val dir = java.nio.file.Files.createTempDirectory("graft-anomb").toString
+    val dir = tempDir("graft-anomb").toString
     (events :+ (("B", at(45)))).zipWithIndex
       .map { case ((t, ts), i) => (i.toLong, ts, i.toLong % 5, t, 1.0, "p") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")

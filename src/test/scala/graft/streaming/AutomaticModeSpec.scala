@@ -20,8 +20,8 @@ class AutomaticModeSpec extends SparkSpec {
     import graft.gtfs.GtfsRt._
     val schedule = GtfsStatic.read(spark, "fixtures/gtfs_tiny")
     val stats = StatisticsIO.computeAndSave(GtfsPipeline.records(spark),
-      schedule, Files.createTempDirectory("auto2_stats").toString)
-    val rtDir = Files.createTempDirectory("auto2_rt")
+      schedule, tempDir("auto2_stats").toString)
+    val rtDir = tempDir("auto2_rt")
     def feed(name: String, ts: Long, seq: Int, stop: String, delay: Int): Unit =
       Files.write(rtDir.resolve(name), encode(FeedMessage(Some(ts), Seq(
         TripUpdate(TripDescriptor(Some("tA1"), None,
@@ -32,7 +32,7 @@ class AutomaticModeSpec extends SparkSpec {
     feed("f1.pb", 1000L, 1, "s1", 120)
     feed("f2.pb", 2000L, 2, "s2", 144)
 
-    val base = Files.createTempDirectory("auto2").toString
+    val base = tempDir("auto2").toString
     val (qr, qp) = RtStream.startAutomatic(spark, rtDir.toString, schedule, stats,
       recordsPath = s"$base/records", predictionsPath = s"$base/predictions",
       checkpointBase = s"$base/ckpt",
@@ -60,8 +60,8 @@ class AutomaticModeSpec extends SparkSpec {
     import graft.gtfs.GtfsRt._
     val schedule = GtfsStatic.read(spark, "fixtures/gtfs_tiny")
     val stats = StatisticsIO.computeAndSave(GtfsPipeline.records(spark),
-      schedule, Files.createTempDirectory("auto3_stats").toString)
-    val rtDir = Files.createTempDirectory("auto3_rt")
+      schedule, tempDir("auto3_stats").toString)
+    val rtDir = tempDir("auto3_rt")
     def feed(name: String, ts: Long, seq: Int, stop: String, delay: Int): Unit =
       Files.write(rtDir.resolve(name), encode(FeedMessage(Some(ts), Seq(
         TripUpdate(TripDescriptor(Some("tA1"), None,
@@ -71,7 +71,7 @@ class AutomaticModeSpec extends SparkSpec {
             Some(StopTimeEvent(Some(delay), None)))))))))
     feed("f1.pb", 1000L, 1, "s1", 120)
     feed("f2.pb", 2000L, 2, "s2", 144)
-    val base = Files.createTempDirectory("auto3").toString
+    val base = tempDir("auto3").toString
     def runOnce(): Unit = {
       val (qr, qp) = RtStream.startAutomatic(spark, rtDir.toString, schedule, stats,
         recordsPath = s"$base/records", predictionsPath = s"$base/predictions",
@@ -111,7 +111,7 @@ class AutomaticModeSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val schedule = GtfsStatic.read(spark, "fixtures/gtfs_tiny")
     val stats = StatisticsIO.computeAndSave(GtfsPipeline.records(spark),
-      schedule, Files.createTempDirectory("auto_stats").toString)
+      schedule, tempDir("auto_stats").toString)
 
     val input = MemoryStream[RtStream.VehicleUpdate]
     val q = RtStream.dedupPredictionWork(input.toDS(), ttlMs = 0)

@@ -24,7 +24,7 @@ class Bm25StreamSpec extends SparkSpec {
     val batches = Seq((0L until 20L).map(doc), (20L until 45L).map(doc),
       (45L until 60L).map(doc))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-stream")
+    val dir = tempDir("graft-bm25-stream")
     val path = dir.resolve("ix").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
@@ -69,7 +69,7 @@ class Bm25StreamSpec extends SparkSpec {
         .mkString(" "))
     val batches = Seq((0L until 20L).map(doc), (20L until 40L).map(doc),
       (40L until 55L).map(doc), (55L until 70L).map(doc))
-    val path = java.nio.file.Files.createTempDirectory("graft-bm25-compact")
+    val path = tempDir("graft-bm25-compact")
       .resolve("ix").toString
     val sink = DocStream.bm25IndexSink(path)
     def offline(n: Int) = CurationQueries.buildBm25Index(
@@ -122,7 +122,7 @@ class Bm25StreamSpec extends SparkSpec {
       (i, Seq.fill(5 + rnd.nextInt(5))(vocab(rnd.nextInt(vocab.size)))
         .mkString(" "))
     val batches = (0 until 5).map(b => (b * 15L until (b + 1) * 15L).map(doc))
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25-auto")
+    val dir = tempDir("graft-bm25-auto")
     val path = dir.resolve("ix").toString
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
@@ -161,7 +161,7 @@ class Bm25StreamSpec extends SparkSpec {
         .mkString(" "))
     val batches = Seq((0L until 15L).map(doc), (15L until 30L).map(doc),
       (30L until 42L).map(doc))
-    val path = java.nio.file.Files.createTempDirectory("graft-bm25-crash")
+    val path = tempDir("graft-bm25-crash")
       .resolve("ix").toString
     val sink = DocStream.bm25IndexSink(path)
     sink(batches(0).toDF("doc_id", "text"), 0L)
@@ -203,7 +203,7 @@ class Bm25StreamSpec extends SparkSpec {
       (i, Seq.fill(5 + rnd.nextInt(5))(vocab(rnd.nextInt(vocab.size)))
         .mkString(" "))
     val batches = Seq((0L until 15L).map(doc), (15L until 28L).map(doc))
-    val path = java.nio.file.Files.createTempDirectory("graft-bm25-partial")
+    val path = tempDir("graft-bm25-partial")
       .resolve("ix").toString
     val sink = DocStream.bm25IndexSink(path)
     sink(batches(0).toDF("doc_id", "text"), 0L)
@@ -243,7 +243,7 @@ class Bm25StreamSpec extends SparkSpec {
       (i, Seq.fill(5 + rnd.nextInt(5))(vocab(rnd.nextInt(vocab.size)))
         .mkString(" "))
     val batches = Seq((0L until 15L).map(doc), (15L until 28L).map(doc))
-    val path = java.nio.file.Files.createTempDirectory("graft-bm25-regress")
+    val path = tempDir("graft-bm25-regress")
       .resolve("ix").toString
     val sink = DocStream.bm25IndexSink(path)
     sink(batches(0).toDF("doc_id", "text"), 0L)
@@ -273,7 +273,7 @@ class Bm25StreamSpec extends SparkSpec {
     def doc(i: Long) = (i,
       Seq.fill(5 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.size)))
         .mkString(" "), s"src${i % 3}")
-    val sfDir = java.nio.file.Files.createTempDirectory("graft-bm25-sf")
+    val sfDir = tempDir("graft-bm25-sf")
     val storeRoot = sfDir.resolve("stores").toString
     def writeCorpus(docs: Seq[(Long, String, String)]): Unit =
       docs.toDF("doc_id", "text", "source").coalesce(1)

@@ -26,7 +26,7 @@ class ComposedStreamSpec extends SparkSpec {
   test("automatic mode + three index sinks co-resident in one session") {
     import graft.gtfs.GtfsRt._
     import spark.implicits._
-    val base = Files.createTempDirectory("graft-composed").toString
+    val base = tempDir("graft-composed").toString
 
     // ── the three index stores (tiny corpora; auto-cadence = 2 so at
     // least one compaction fires DURING the composed run) ──
@@ -65,7 +65,7 @@ class ComposedStreamSpec extends SparkSpec {
     val schedule = GtfsStatic.read(spark, "fixtures/gtfs_tiny")
     val stats = StatisticsIO.computeAndSave(GtfsPipeline.records(spark),
       schedule, s"$base/stats")
-    val rtDir = Files.createTempDirectory("graft-composed-rt")
+    val rtDir = tempDir("graft-composed-rt")
     def feed(name: String, ts: Long, seq: Int, stop: String, delay: Int): Unit =
       Files.write(rtDir.resolve(name), encode(FeedMessage(Some(ts), Seq(
         TripUpdate(TripDescriptor(Some("tA1"), None,

@@ -1,17 +1,17 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.curves.{Curve, CurveBuilder}
+import graft.curves.{Curve, CurveBuilder, Runs}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Incremental curve maintenance: the count histogram must be a LOSSLESS
-  * sufficient statistic (bit-equal curves vs the batch expansion), the
+  * sufficient statistic (bit-equal curves vs the expanded sample list), the
   * stream must converge to the batch answer under any batch split, and
   * state must be bounded by the delay domain. */
 class CurveStreamSpec extends SparkSpec {
 
-  test("makeCurveFromCounts is bit-equal to makeCurve on expansions") {
+  test("histogram runs are bit-equal to makeCurve on expansions") {
     val rnd = new scala.util.Random(11)
     (0 until 50).foreach { trial =>
       // adversarial inclusions: exact 0.0 (the lastX quirk), negatives,
@@ -22,8 +22,10 @@ class CurveStreamSpec extends SparkSpec {
         .mapValues(_.size.toLong).toSeq
         .map { case (v, c) => (v.toFloat, c) }
       val expanded = values.map(_.toFloat)
-      val got = Curve.makeCurveFromCounts(hist)
-      val want = Curve.makeCurve(expanded, None)
+      // the focused loop too: a run adds its weight once per value
+      val focus = if (trial % 2 == 0) None else Some(expanded.head)
+      val got = Curve.makeCurve(Runs.fromCounts(hist), focus)
+      val want = Curve.makeCurve(expanded, focus)
       assert(got.map(_._1.points) == want.map(_._1.points),
         s"trial $trial diverged for $values")
       assert(got.map(_._2) == want.map(_._2))
@@ -123,7 +125,7 @@ class CurveStreamSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[CurveStream.DelayObs]
-    val q = CurveStream.generalCurveStream(input.toDS(), minSamples = 20)
+    val q = CurveStream.generalCurveStream(input.toDS())
       .writeStream.outputMode(OutputMode.Update())
       .format("memory").queryName("curve_bounded").start()
     try {

@@ -68,7 +68,7 @@ class PrefixStreamSpec extends SparkSpec {
     assert(want == Set(105L, 106L, 107L, 108L, 109L, 203L, 204L),
       "fixture sanity: fresh docs accepted, near-dups rejected")
 
-    val path = java.nio.file.Files.createTempDirectory("graft-prefix-stream")
+    val path = tempDir("graft-prefix-stream")
       .resolve("ix").toString
     DocStream.initPrefixIndexStore(base.toDF("doc_id", "text"), path, T)
     val sink = DocStream.prefixIndexSink(path, T)
@@ -178,7 +178,7 @@ class PrefixStreamSpec extends SparkSpec {
     assert(want == Set(100L, 101L, 102L, 103L, 104L, 105L, 202L, 203L),
       "fixture sanity")
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-prefix-bloom")
+    val tmp = tempDir("graft-prefix-bloom")
     val pOn = tmp.resolve("on").toString
     val pOff = tmp.resolve("off").toString
     Seq(pOn, pOff).foreach(p =>
@@ -258,7 +258,7 @@ class PrefixStreamSpec extends SparkSpec {
     assert(want == Set(105L, 106L, 107L, 108L, 109L, 203L, 204L, 302L, 400L),
       "fixture sanity")
 
-    val path = java.nio.file.Files.createTempDirectory("graft-prefix-auto")
+    val path = tempDir("graft-prefix-auto")
       .resolve("ix").toString
     DocStream.initPrefixIndexStore(base.toDF("doc_id", "text"), path, T)
     val sink = DocStream.prefixIndexSink(path, T, autoCompactEvery = 2)
@@ -297,7 +297,7 @@ class PrefixStreamSpec extends SparkSpec {
     def cluster(tag: String) = (0 until 8).map(j => s"$tag$j")
     val base = (0L until 12L).map(i => doc(i, cluster(s"b${i / 3}_") :+ s"n$i"))
     val b0 = (0 until 4).map(i => doc(100L + i, cluster(s"f${i}_") :+ s"m$i"))
-    val root = java.nio.file.Files.createTempDirectory("graft-prefix-crash")
+    val root = tempDir("graft-prefix-crash")
     val path = root.resolve("ix").toString
     DocStream.initPrefixIndexStore(base.toDF("doc_id", "text"), path, T)
     val sink = DocStream.prefixIndexSink(path, T)
@@ -355,7 +355,7 @@ class PrefixStreamSpec extends SparkSpec {
       doc(101L, cluster("b1_") :+ "m1"))
     val b1 = Seq(doc(200L, cluster("g0_") :+ "p0"),
       doc(201L, cluster("f0_") :+ "p1")) // near-dup of b0's ACCEPT
-    val dir = java.nio.file.Files.createTempDirectory("graft-prefix-realstream")
+    val dir = tempDir("graft-prefix-realstream")
     val path = dir.resolve("ix").toString
     DocStream.initPrefixIndexStore(base.toDF("doc_id", "text"), path, T)
     implicit val sqlCtx = spark.sqlContext
@@ -380,7 +380,7 @@ class PrefixStreamSpec extends SparkSpec {
     val base = (0L until 12L).map(i => doc(i, cluster(s"b${i / 3}_") :+ s"n$i"))
     val b0 = (0 until 3).map(i => doc(100L + i, cluster(s"f${i}_") :+ s"m$i"))
     val b1 = (0 until 3).map(i => doc(200L + i, cluster(s"g${i}_") :+ s"p$i"))
-    val root = java.nio.file.Files.createTempDirectory("graft-prefix-sinkcrash")
+    val root = tempDir("graft-prefix-sinkcrash")
     val path = root.resolve("ix").toString
     DocStream.initPrefixIndexStore(base.toDF("doc_id", "text"), path, T)
     val sink = DocStream.prefixIndexSink(path, T)
@@ -421,7 +421,7 @@ class PrefixStreamSpec extends SparkSpec {
     val base = (0L until 12L).map(i => doc(i, cluster(s"b${i / 3}_") :+ s"n$i"))
     val b0 = (0 until 3).map(i => doc(100L + i, cluster(s"f${i}_") :+ s"m$i"))
     val b1 = (0 until 3).map(i => doc(200L + i, cluster(s"g${i}_") :+ s"p$i"))
-    val root = java.nio.file.Files.createTempDirectory("graft-prefix-partial")
+    val root = tempDir("graft-prefix-partial")
     val path = root.resolve("ix").toString
     DocStream.initPrefixIndexStore(base.toDF("doc_id", "text"), path, T)
     val sink = DocStream.prefixIndexSink(path, T)
@@ -461,7 +461,7 @@ class PrefixStreamSpec extends SparkSpec {
     val base = (0L until 12L).map(i => doc(i, cluster(s"b${i / 3}_") :+ s"n$i"))
     val b0 = (0 until 3).map(i => doc(100L + i, cluster(s"f${i}_") :+ s"m$i"))
     val b1 = (0 until 3).map(i => doc(200L + i, cluster(s"g${i}_") :+ s"p$i"))
-    val root = java.nio.file.Files.createTempDirectory("graft-prefix-regress")
+    val root = tempDir("graft-prefix-regress")
     val path = root.resolve("ix").toString
     DocStream.initPrefixIndexStore(base.toDF("doc_id", "text"), path, T)
     val sink = DocStream.prefixIndexSink(path, T)
@@ -493,7 +493,7 @@ class PrefixStreamSpec extends SparkSpec {
     def doc(id: Long, tokens: Seq[String]) = (id, tokens.mkString(" "))
     def cluster(tag: String) = (0 until 8).map(j => s"$tag$j")
     val base = (0L until 6L).map(i => doc(i, cluster(s"b${i}_")))
-    val root = java.nio.file.Files.createTempDirectory("graft-prefix-nomark")
+    val root = tempDir("graft-prefix-nomark")
     val path = root.resolve("ix").toString
     DocStream.initPrefixIndexStore(base.toDF("doc_id", "text"), path, T)
     val sink = DocStream.prefixIndexSink(path, T)

@@ -93,8 +93,8 @@ class RtStreamSpec extends SparkSpec {
 
   test("streaming decode + foreachBatch merge produces a last-wins records table") {
     val schedule = GtfsStatic.read(spark, "fixtures/gtfs_tiny")
-    val rtDir = Files.createTempDirectory("rt_stream")
-    val outDir = Files.createTempDirectory("rt_out")
+    val rtDir = tempDir("rt_stream")
+    val outDir = tempDir("rt_out")
     val recordsPath = outDir.resolve("records").toString
     val checkpoint = outDir.resolve("ckpt").toString
 
