@@ -75,17 +75,25 @@ object Graft {
     StatisticsIO.computeAndSave(records, schedule, statsDir)
   }
 
-  /** `predict single`: build the interactive point-lookup for one route
-    * (partition-pruned statistics load; reference `run_single`). Loading
-    * the statistics runs no Spark job (their schemas are declared, see
-    * [[StatisticsIO]]); the jobs are the lookup's own collects. */
+  /** `predict single` (reference `run_single`): the interactive point
+    * lookup over every route's statistics. It is built once per snapshot
+    * of the files of the three statistics tables and `routes.txt` (one
+    * [[graft.operators.SharedRelations.value]] entry) and shared by every
+    * caller: a request on a warm snapshot lists those files and runs no
+    * Spark job. A rewritten statistics table or routes file (say,
+    * `analyse` run again into `statsDir`) is a miss and a rebuild, never
+    * a stale answer. `routeId` is the route the request is about; the
+    * returned lookup answers for any route exactly as the route-pruned
+    * `Predictor.pointLookup(…, Some(routeId))` would. */
   def predictorFor(spark: SparkSession, statsDir: String, scheduleDir: String,
-                   routeId: String): PointPredictor = {
-    val stats = StatisticsIO.load(spark, statsDir)
-    val schedule = GtfsStatic.read(spark, scheduleDir)
-    Predictor.pointLookup(stats.general, stats.curveSets, stats.defaults,
-      schedule.routes, Some(routeId))
-  }
+                   routeId: String): PointPredictor =
+    graft.operators.SharedRelations.value("predictor", spark,
+        Seq(StatisticsIO.GeneralDir, StatisticsIO.CurveSetsDir, StatisticsIO.DefaultDir)
+          .map(d => s"$statsDir/$d") :+ s"$scheduleDir/routes.txt") {
+      val stats = StatisticsIO.load(spark, statsDir)
+      Predictor.pointLookup(stats.general, stats.curveSets, stats.defaults,
+        GtfsStatic.read(spark, scheduleDir).routes)
+    }
 
   /** Scheduled (basis-less) predictions for every trip in the horizon
     * (§3.3 / §2.8 forward fill; resumes from the A12 watermark). */

@@ -50,8 +50,12 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    println(s"[verify] shared relations: ${graft.operators.SharedRelations.hits} hits, " +
-      s"${graft.operators.SharedRelations.misses} misses")
+    val memo = graft.operators.SharedRelations
+    println(s"[verify] shared relations: ${memo.hits} hits, ${memo.misses} misses, " +
+      s"${memo.residentBytes} bytes resident")
+    println("[verify] shared relations by kind (hits/misses, resident bytes): " +
+      memo.byKind.map(k => s"${k.kind} ${k.hits}/${k.misses} ${k.residentBytes}")
+        .mkString(", "))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")

@@ -177,7 +177,7 @@ object GramHashArray {
       GramHashArray(ColumnBridge.expression(text), gramLen, stride))
 }
 
-/** Per-TOKEN polynomial hashes as a native expression (r10): split the
+/** Per-TOKEN polynomial hashes as a native expression: split the
   * text at single spaces (empty segments kept, exactly like
   * `split(text, " ")` / DuckDB `string_split`) and hash each token's
   * first 16 codepoints Σₖ cp(k)·(31ᵏ mod p) mod p — the portable token

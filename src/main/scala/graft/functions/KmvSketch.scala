@@ -15,7 +15,7 @@ import org.apache.spark.sql.expressions.Aggregator
   *
   * The hash is the caller's portable multiplicative hash on [0, M); the
   * sketch itself never hashes, so both engines rank identical values.
-  * Caveat (ADVICE r6): the below-k branch is exact over distinct HASH
+  * The below-k branch is exact over distinct HASH
   * values, not distinct keys — two keys colliding under the caller's
   * hash merge into one sketch entry, so n_kept can undercount the
   * original key universe by the (input-dependent) collision count. The

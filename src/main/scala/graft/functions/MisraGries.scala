@@ -21,7 +21,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * al., PODS 2012) that keeps the error bound additive across partials,
   * which is what makes map-side partial aggregation sound.
   *
-  * Amortization (r7 review): the textbook formulation decrements the
+  * Amortization: the textbook formulation decrements the
   * FULL buffer on every unseen tail key — O(k) per element exactly in
   * the tail-dominated regime the sketch targets. This buffer grows to
   * 2k and then compacts once, so a compaction's O(k) rebuild is paid at

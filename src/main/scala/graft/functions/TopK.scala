@@ -62,8 +62,8 @@ class TopK(k: Int)
 }
 
 object TopK {
-  /** The (Long, Long) udaf every call site needs — one place to change
-    * the encoder wiring instead of six (r7f review). */
+  /** The (Long, Long) udaf every call site needs: the encoder wiring
+    * lives here, in one place for all of them. */
   def longPairUdaf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udaf(new TopK(k),
       org.apache.spark.sql.Encoders.tuple(

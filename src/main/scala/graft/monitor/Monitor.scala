@@ -3,6 +3,7 @@ package graft.monitor
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 import graft.curves.{Curve, CurveBuilder}
 import graft.functions.Geo
 import graft.model.OriginType
@@ -75,8 +76,16 @@ object Monitor {
     *    window over that vehicle key on the same windowed scan, so the
     *    predictions are read once; rows with a null origin_type are
     *    dropped, and a row with a null key column is never shadowed
-    *  - F7: drop departures at a trip's final stop
+    *  - F7: drop departures at a trip's final stop (and every row of a
+    *    trip without stop times)
     *  - W4: sort by the median predicted departure
+    *
+    * F7's last stop per trip and J6's headsign and route columns come
+    * from [[boardDims]]: one persisted [[graft.operators.SharedRelations]]
+    * entry per snapshot of the `trips`, `stopTimes` and `routes` files,
+    * so a board re-parses no schedule file and runs no aggregation over
+    * stop times; a rewritten schedule file is a miss and a rebuild,
+    * never a stale answer.
     *
     * `predictions` columns: stop_id, event_type, prediction_min/max
     * (timestamps), route_id, trip_id, trip_start_date, trip_start_time,
@@ -99,24 +108,43 @@ object Monitor {
       .withColumn("shadowed", shadowed)
       .filter(realtime || (col("origin_type").isNotNull && !col("shadowed")))
       .drop("shadowed")
-    // F7: final stops never "depart"
-    val lastStops = stopTimes.groupBy("trip_id")
-      .agg(max("stop_sequence").as("last_seq"))
-    val notLast = deduped
-      .join(broadcast(lastStops), Seq("trip_id"), "left")
+    val (tripDims, routeDims) = boardDims(trips, routes, stopTimes)
+    // F7: final stops never "depart"; J6: headsign and route metadata
+    val enriched = deduped
+      .join(broadcast(tripDims), Seq("trip_id"))
       .filter(col("stop_sequence") =!= col("last_seq"))
       .drop("last_seq")
-    // J6: metadata
-    val enriched = notLast
-      .join(broadcast(trips.select(col("trip_id"), col("trip_headsign"))), Seq("trip_id"), "left")
-      .join(broadcast(routes.select(col("route_id"), col("route_short_name"),
-        col("route_type"))), Seq("route_id"), "left")
-    // W4: order by median predicted time = scheduled instant + median delay
-    enriched
+      .join(broadcast(routeDims), Seq("route_id"), "left")
+    // W4: order by median predicted time = scheduled instant + median
+    // delay. A board is display-sized, so it is sorted in one partition:
+    // no range-partitioning exchange (a sampling job and a shuffle)
+    enriched.coalesce(1)
       .withColumn("median_delay", curveQuantile(col("prediction_curve"), lit(0.5f)))
       .withColumn("median_time", timestamp_add("SECOND",
         col("median_delay").cast("int"), col("event_instant")))
       .orderBy(col("median_time"), col("trip_id"))
+  }
+
+  /** The board's schedule dimensions, persisted once per snapshot of
+    * the three inputs' files:
+    *  - per trip with stop times: `trip_id`, `last_seq` (its largest
+    *    stop_sequence) and `trip_headsign`, one row per `trips` row of
+    *    the trip (a null headsign when it has none), so an inner join on
+    *    trip_id keeps exactly the rows and multiplicities of F7's left
+    *    join plus J6's headsign join;
+    *  - per route: `route_id`, `route_short_name`, `route_type`. */
+  private def boardDims(trips: DataFrame, routes: DataFrame,
+                        stopTimes: DataFrame): (DataFrame, DataFrame) = {
+    val Seq(tripDims, routeDims) = graft.operators.SharedRelations.group(
+        "boarddims", Seq(trips, stopTimes, routes), 0, 0) {
+      val lastStops = stopTimes.groupBy("trip_id")
+        .agg(max("stop_sequence").as("last_seq"))
+      Seq(lastStops.join(trips.select(col("trip_id"), col("trip_headsign")),
+          Seq("trip_id"), "left"),
+        routes.select(col("route_id"), col("route_short_name"), col("route_type")))
+        .map(_.persist(StorageLevel.MEMORY_AND_DISK))
+    }
+    (tripDims, routeDims)
   }
 
   /** Journey-transfer scoring (reference `src/monitor/mod.rs:855-884`):

@@ -467,7 +467,7 @@ object AssemblyQueries {
     * returns. */
   private def bpeTrainShared(documents: DataFrame, merges: Int)
   : (DataFrame, DataFrame) =
-    SharedRelations.group("bpe", documents, merges, 0) {
+    SharedRelations.group("bpe", Seq(documents), merges, 0) {
       val (table, encoded) = bpeTrain(documents, merges)
       Seq(table, encoded)
     } match { case Seq(table, encoded) => (table, encoded) }

@@ -14,6 +14,22 @@ import QueryDef.OrderedResultOps
   * reproduce bit-for-bit (no xxhash64 in result-bearing positions). */
 object PipelineQueries {
 
+  /** The LSH length pre-filter: whether a candidate pair of distinct-
+    * token counts `n1`, `n2` can reach token-Jaccard `threshold`. The
+    * verify step admits a pair when `|A∩B| / |A∪B| >= threshold` in
+    * double arithmetic; since |A∩B| ≤ min(n₁,n₂) and |A∪B| ≥ max(n₁,n₂),
+    * and correctly rounded division is monotone, a pair it admits has
+    * `min / max >= threshold` in the same arithmetic. So this prunes only
+    * pairs verification rejects, at any count (an Int count converts to
+    * double exactly), with no slack: a pair with min = t·max is kept.
+    * Two empty sets (max 0) are left to verification. */
+  private[operators] def lengthAdmits(n1: Column, n2: Column,
+                                      threshold: Double): Column = {
+    val hi = greatest(n1, n2).cast("double")
+    when(hi === 0.0, lit(true))
+      .otherwise(least(n1, n2).cast("double") / hi >= lit(threshold))
+  }
+
   private def tokens(c: org.apache.spark.sql.Column) = split(c, " ")
 
   /** Multiplicative content hash of doc_id, shared by the sampling (q59),
@@ -439,15 +455,11 @@ object PipelineQueries {
       val trB = bandedAll.filter(col("source") =!= "src0").drop("source")
       val evB = bandedAll.filter(col("source") === "src0").drop("source")
         .withColumnRenamed("doc_id", "eval_id").withColumnRenamed("n", "ne")
-      // LENGTH pre-filter on band candidates (r12, exact — the
-      // prefixSimilarityJoin discipline): jac ≥ t ⇒ min(n₁,n₂) ≥
-      // t·max(n₁,n₂), epsilon-slack so a float-boundary pair can only
-      // be ADMITTED (verification decides); prunes candidate pairs
-      // before the array-verify join ever materializes their token
-      // arrays
+      // LENGTH pre-filter on band candidates ([[lengthAdmits]]):
+      // prunes candidate pairs before the array-verify join ever
+      // materializes their token arrays
       val cand = trB.join(broadcast(evB), bandKey)
-        .filter(least(col("n"), col("ne")).cast("double") + 1e-9 >=
-          greatest(col("n"), col("ne")).cast("double") * threshold)
+        .filter(lengthAdmits(col("n"), col("ne"), threshold))
         .select(col("doc_id"), col("eval_id")).distinct()
       val evToks = ev.select(col("doc_id").as("eval_id"),
         array_distinct(split(col("text"), " ")).as("et"))
@@ -582,12 +594,10 @@ object PipelineQueries {
       (if (heavyOnly) df.filter(col("__heavy").isNotNull)
        else df.filter(col("__heavy").isNull))
         .select(bandKey.map(col) ++ Seq(col(idCol), col(nCol)): _*)
-    // LENGTH pre-filter on bucket candidates (r12, exact — jac ≥ t ⇒
-    // min(n₁,n₂) ≥ t·max(n₁,n₂), epsilon-slack admits boundary pairs
-    // for verification to decide): prunes cross-snapshot collisions
-    // before the verify join touches their token arrays
-    val lenOk = least(col("nn"), col("no")).cast("double") + lit(1e-9) >=
-      greatest(col("nn"), col("no")).cast("double") * lit(threshold)
+    // LENGTH pre-filter on bucket candidates ([[lengthAdmits]]):
+    // prunes cross-snapshot collisions before the verify join touches
+    // their token arrays
+    val lenOk = lengthAdmits(col("nn"), col("no"), threshold)
     val light = side(newF, "doc_id", "nn", heavyOnly = false)
       .join(side(oldF, "old_id", "no", heavyOnly = false), bandKey)
       .filter(lenOk)
@@ -942,17 +952,15 @@ object PipelineQueries {
     // pair happens to fall below t (an interleaved satellite) no longer
     // severs the cluster — the measured residual of the r10 rung.
     // Volume stays ≤ hops·(n−1) per bucket: linear, never C(n,2).
-    // LENGTH pre-filter on chain candidates (r12, exact — jac ≥ t ⇒
-    // min(n₁,n₂) ≥ t·max(n₁,n₂), epsilon slack): the banding relation
-    // carries the verifier's distinct-token count, so an incompatible
-    // chain mate is dropped before the verify join materializes its
-    // token arrays. Identical verified edge set by implication.
+    // LENGTH pre-filter on chain candidates ([[lengthAdmits]]): the
+    // banding relation carries the verifier's distinct-token count, so
+    // an incompatible chain mate is dropped before the verify join
+    // materializes its token arrays. Identical verified edge set.
     val chainCand = (1 to chainHops).map(h => banded
         .withColumn("nxt", lead(col("doc_id"), h).over(w))
         .withColumn("nxtn", lead(col("n"), h).over(w))
         .filter(col("nxt").isNotNull &&
-          (least(col("n"), col("nxtn")).cast("double") + lit(1e-9) >=
-            greatest(col("n"), col("nxtn")).cast("double") * lit(threshold)))
+          lengthAdmits(col("n"), col("nxtn"), threshold))
         // bucket-ordered ⇒ id1 < id2 by construction
         .select(col("doc_id").as("id1"), col("nxt").as("id2")))
       .reduce(_.unionByName(_)).distinct()

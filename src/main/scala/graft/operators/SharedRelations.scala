@@ -13,17 +13,22 @@ import org.apache.spark.storage.StorageLevel
   * tables, the BPE training run of q89/q90, …). One map, one key, one
   * hit rule and one [[clear]].
   *
-  * Key: (kind, 32-bit `semanticHash` of the input's analyzed plan,
-  * identity of the input's SparkSession, two integer knobs). `kind`
-  * names the construction and must be unique per builder; the knobs
-  * carry its parameters (a threshold scaled to ppm, a band layout, …).
+  * Key: (kind, 32-bit hash of the inputs, identity of the inputs'
+  * SparkSession, two integer knobs). The inputs are relations (their
+  * analyzed plans' `semanticHash`es; most constructions read one,
+  * [[group]] may read several) or, for a [[value]], the file paths it
+  * is built from. `kind` names the construction and must be unique per
+  * builder (SharedRelationKindsSpec scans the sources for duplicates);
+  * the knobs carry its parameters (a threshold scaled to ppm, a band
+  * layout, …).
   *
   * Hit rule: an entry under the key is served only when
   *  - it belongs to the SAME SparkSession (a relation from a stopped or
   *    different session would hand out dead or foreign blocks);
-  *  - its plan `sameResult`s the input's (the 32-bit hash is confirmed,
-  *    not trusted);
-  *  - its [[fingerprint]] equals the input's: the snapshot rule. A
+  *  - its plans `sameResult` the inputs' and its paths equal theirs (the
+  *    32-bit hash is confirmed, not trusted);
+  *  - its files equal the inputs' ([[fingerprint]] of the relations,
+  *    [[filesUnder]] the paths): the snapshot rule. A
   *    parquet read's plan names its root path, not its files, so a
   *    rewritten input would otherwise hit the relation built from the
   *    old files (and after an in-session Spark overwrite, one whose
@@ -37,6 +42,12 @@ import org.apache.spark.storage.StorageLevel
   * Values: [[apply]] persists the built relation MEMORY_AND_DISK with
   * its lineage intact (memory pressure demotes blocks to disk; a lost
   * block recomputes). [[group]] stores the caller's relations as built.
+  * [[value]] stores a driver-side value (a collected lookup structure):
+  * a hit on it builds no relation and runs no Spark job.
+  *
+  * Counters: hits and misses per kind ([[byKind]], totals [[hits]] and
+  * [[misses]]), and the bytes the live entries' cached relations hold
+  * in memory and on disk, read from their cached RDDs' storage info.
   *
   * Bound: at most [[MaxEntries]] entries in access order; a miss on a
   * full memo retires ONLY the least-recently-used entry — relations
@@ -64,10 +75,13 @@ object SharedRelations {
   private val MaxRetiredOwned = 32
 
   private final case class Entry(
+    kind: String,
     session: SparkSession,
-    plan: LogicalPlan,
+    plans: Seq[LogicalPlan],
+    paths: Seq[String],
     files: Fingerprint,
     dfs: Seq[DataFrame],
+    value: Any,
     owned: Seq[(org.apache.hadoop.conf.Configuration, String)])
 
   // accessOrder = true: get() moves an entry to the tail, so the head
@@ -77,14 +91,47 @@ object SharedRelations {
       16, 0.75f, true)
   private val retiredOwned = scala.collection.mutable.Queue
     .empty[(org.apache.hadoop.conf.Configuration, String)]
-  private var hitCount = 0L
-  private var missCount = 0L
+  // kind -> (hits, misses) since the JVM started
+  private val counts = scala.collection.mutable.Map.empty[String, (Long, Long)]
+
+  /** One kind's lookups since the JVM started, and the bytes its live
+    * entries' cached relations hold now (memory plus disk). */
+  final case class KindStats(kind: String, hits: Long, misses: Long,
+                             residentBytes: Long)
 
   /** Lookups served from the memo since the JVM started. */
-  def hits: Long = entries.synchronized(hitCount)
+  def hits: Long = entries.synchronized(counts.values.map(_._1).sum)
 
   /** Lookups that built their relation since the JVM started. */
-  def misses: Long = entries.synchronized(missCount)
+  def misses: Long = entries.synchronized(counts.values.map(_._2).sum)
+
+  /** [[KindStats]] of every kind looked up since the JVM started, by
+    * kind. Reading the storage info runs no Spark job. */
+  def byKind: Seq[KindStats] = entries.synchronized {
+    import scala.jdk.CollectionConverters._
+    val live = entries.values.asScala.toSeq
+    val stored = live.map(_.session).distinct.flatMap { s =>
+      try s.sparkContext.getRDDStorageInfo.map(i => i.id -> (i.memSize + i.diskSize))
+      catch { case _: Throwable => Nil } // a stopped session stores nothing
+    }.toMap
+    counts.toSeq.sortBy(_._1).map { case (kind, (h, m)) =>
+      KindStats(kind, h, m, live.filter(_.kind == kind)
+        .flatMap(_.dfs.flatMap(cachedRddId)).distinct
+        .map(stored.getOrElse(_, 0L)).sum)
+    }
+  }
+
+  /** Bytes the live entries' cached relations hold now. */
+  def residentBytes: Long = byKind.map(_.residentBytes).sum
+
+  /** The id of the RDD that holds `df`'s cached blocks, once it is built. */
+  private def cachedRddId(df: DataFrame): Option[Int] =
+    try df.sparkSession.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .map(_.cachedColumnBuffers.id)
+    catch { case _: Throwable => None }
 
   /** The input files `df` reads: every file the analyzed plan's
     * `HadoopFsRelation`s list, taken from the file index's own listing
@@ -110,24 +157,65 @@ object SharedRelations {
     * (kind, input, a, b) and snapshot, persisted MEMORY_AND_DISK. */
   def apply(kind: String, input: DataFrame, a: Int, b: Int)
            (build: => DataFrame): DataFrame =
-    group(kind, input, a, b)(
+    group(kind, Seq(input), a, b)(
       Seq(build.persist(StorageLevel.MEMORY_AND_DISK))).head
 
   /** [[apply]] for a construction that yields several relations at
-    * once; they are stored as built (no persist). */
-  def group(kind: String, input: DataFrame, a: Int, b: Int)
-           (build: => Seq[DataFrame]): Seq[DataFrame] =
+    * once, from one input or several; they are stored as built (no
+    * persist). */
+  def group(kind: String, inputs: Seq[DataFrame], a: Int, b: Int)
+           (build: => Seq[DataFrame]): Seq[DataFrame] = {
+    val session = inputs.head.sparkSession
+    require(inputs.forall(_.sparkSession eq session),
+      s"$kind: inputs from different sessions")
+    lookup(kind, session, inputs.map(_.queryExecution.analyzed), Nil,
+      inputs.flatMap(fingerprint).distinct.sorted, a, b)((build, ())).dfs
+  }
+
+  /** The driver-side value `build` makes from the files under `paths`,
+    * built once per (kind, paths) and snapshot of those files
+    * ([[filesUnder]]). A hit builds no relation and runs no Spark job:
+    * it costs the listing. */
+  def value[T](kind: String, spark: SparkSession, paths: Seq[String])
+              (build: => T): T =
+    lookup(kind, spark, Nil, paths, filesUnder(spark, paths), 0, 0)(
+      (Nil, build)).value.asInstanceOf[T]
+
+  /** Every file under `paths` (a path that names a file is that file; a
+    * directory contributes its files at any depth; a missing path
+    * nothing), listed with the paths' own Hadoop file systems. */
+  def filesUnder(spark: SparkSession, paths: Seq[String]): Fingerprint = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def walk(fs: org.apache.hadoop.fs.FileSystem,
+             st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk(fs, _))
+      else Seq(st)
+    paths.flatMap { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      val fs = path.getFileSystem(conf)
+      try walk(fs, fs.getFileStatus(path))
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .distinct.sorted
+  }
+
+  private def lookup(kind: String, session: SparkSession, plans: Seq[LogicalPlan],
+                     paths: Seq[String], files: Fingerprint, a: Int, b: Int)
+                    (build: => (Seq[DataFrame], Any)): Entry =
     entries.synchronized {
-      val plan = input.queryExecution.analyzed
-      val files = fingerprint(input)
-      val key = (kind, plan.semanticHash(),
-        System.identityHashCode(input.sparkSession), a, b)
+      val key = (kind, scala.util.hashing.MurmurHash3.orderedHash(
+        plans.map(_.semanticHash()) ++ paths.map(_.##)),
+        System.identityHashCode(session), a, b)
+      def tally(hit: Boolean): Unit = {
+        val (h, m) = counts.getOrElse(kind, (0L, 0L))
+        counts(kind) = if (hit) (h + 1, m) else (h, m + 1)
+      }
       Option(entries.get(key))
-        .filter(e => (e.session eq input.sparkSession) &&
-          e.files == files && e.plan.sameResult(plan))
-        .map { e => hitCount += 1; e.dfs }
+        .filter(e => (e.session eq session) && e.files == files &&
+          e.paths == paths && e.plans.corresponds(plans)(_ sameResult _))
+        .map { e => tally(hit = true); e }
         .getOrElse {
-          missCount += 1
+          tally(hit = false)
           // a hash collision, a dead session or an older snapshot
           // under this exact key: retire it before rebuilding
           Option(entries.remove(key)).foreach(retire)
@@ -136,10 +224,11 @@ object SharedRelations {
             if (it.hasNext) { val ev = it.next(); it.remove(); retire(ev.getValue) }
           }
           val before = Checkpoints.snapshotOneShots()
-          val built = build
-          entries.put(key, Entry(input.sparkSession, plan, files, built,
-            Checkpoints.claimOneShots(before, sameThreadOnly = true)))
-          built
+          val (dfs, value) = build
+          val e = Entry(kind, session, plans, paths, files, dfs, value,
+            Checkpoints.claimOneShots(before, sameThreadOnly = true))
+          entries.put(key, e)
+          e
         }
     }
 

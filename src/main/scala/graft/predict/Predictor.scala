@@ -24,11 +24,11 @@ import graft.model.{PrecisionType, RouteSection, TimeSlot}
   */
 /** The interactive single-request path (reference `run_single` + `predict`,
   * `src/predictor/mod.rs:118-238`): "one trip, one stop, now" must not pay
-  * a full join plan. The statistics tables are dimension-sized — and
-  * per-route slices are partition-pruned scans (StatisticsIO partitions by
-  * route_id) — so they are collected ONCE into hash maps; `predict` then
-  * walks the same ladder as [[Predictor.resolve]] in O(1) per request.
-  * Build via [[Predictor.pointLookup]]. */
+  * a full join plan. The statistics tables are dimension-sized, so they
+  * are collected ONCE into hash maps; `predict` then walks the same ladder
+  * as [[Predictor.resolve]] in O(1) per request. Build via
+  * [[Predictor.pointLookup]]; `graft.Graft.predictorFor` serves one
+  * all-route build per statistics snapshot. */
 final class PointPredictor private[predict] (
     routeTypes: Map[String, Int],
     general: Map[(String, Long, Int, Int), (Curve, Int)],
@@ -225,11 +225,18 @@ object Predictor {
   private def rowCurve(rows: scala.collection.Seq[org.apache.spark.sql.Row]): Curve =
     Curve(rows.map(p => (p.getFloat(0), p.getFloat(1))).toVector)
 
-  /** Build the single-request lookup (reference `run_single`). Pass
-    * `routeId` to collect only that route's statistics slices — with the
-    * route_id-partitioned statistics store that is a pruned scan, which is
-    * what keeps the interactive path cheap at any corpus size; the default
-    * grid is a fixed 726-cell table either way. */
+  /** Build the single-request lookup (reference `run_single`): collect
+    * the statistics into driver-side maps. Every call runs its collects
+    * (one Spark job per table). Pass `routeId` to collect only that
+    * route's slices (a pruned scan of the route_id-partitioned store);
+    * without it the lookup answers for every route, and for any route it
+    * answers exactly as the pruned build does. The default grid is a
+    * fixed 726-cell table either way.
+    *
+    * No memo here: `graft.Graft.predictorFor` keeps the all-route build
+    * in [[graft.operators.SharedRelations]] under its snapshot rule (one
+    * build per set of statistics and routes files; a rewritten file is a
+    * miss and a rebuild, never a stale answer). */
   def pointLookup(generalCurves: DataFrame, curveSets: DataFrame,
                   defaultCurves: DataFrame, routes: DataFrame,
                   routeId: Option[String] = None): PointPredictor = {

@@ -18,7 +18,7 @@ import graft.operators.{AnnQueries, Checkpoints}
   * (AnnStreamSpec pins streamed == offline on the probe results). What
   * DOES drift is the occupancy knob itself: `planesFor(n)` grows with
   * the corpus, and frozen planes at 100× vectors mean 100×-occupancy
-  * buckets (the r8 q93 finding). [[compactAnnIndexStore]] re-derives
+  * buckets. [[compactAnnIndexStore]] re-derives
   * planes from the CURRENT count and re-signs — the
   * `compactPrefixIndexStore` re-freeze discipline applied to bucket
   * geometry instead of element frequencies.
@@ -73,7 +73,7 @@ object AnnStream {
     * a batch's vectors without signatures — those rows simply cannot
     * be candidates until the next load; bounded by one batch).
     *
-    * Concurrent-compaction guard (r9 ADVICE): the planes are read at
+    * Concurrent-compaction guard: the planes are read at
     * batch entry, so a compaction running CONCURRENTLY (violating the
     * quiet-boundary contract) could flip `_base_version` — and with it
     * the plane count — while this batch signs under the OLD planes. The

@@ -24,9 +24,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the watermark passes an hour with no events, it closes with count 0
   * and enters the ring like any other — mirroring the batch query's
   * densified hour axis, so a dying feed's empty hours score z ≪ 0
-  * instead of being invisible to the monitor (the r7 ADVICE finding;
-  * the watermark keeps advancing on the other types' events, which is
-  * exactly the scenario where one feed dies).
+  * instead of being invisible to the monitor (the watermark keeps
+  * advancing on the other types' events, which is exactly the scenario
+  * where one feed dies).
   *
   * State bound: ≤ 24 ring entries + horizon/1h open entries per
   * event_type — dimension-sized forever, independent of throughput.

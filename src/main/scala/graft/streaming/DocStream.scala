@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.OutputMode
   * make) — a document re-ingested after the horizon is admitted again. */
 object DocStream {
 
-  /** Executor-memory-bounded streaming state (r7): the watermark bounds
+  /** Executor-memory-bounded streaming state: the watermark bounds
     * the number of state ROWS, but Spark's default HDFS-backed provider
     * keeps every row on-heap per executor — at horizon-scale throughput
     * (the 100 TB firehose this pipeline targets) dedup state alone would
@@ -153,8 +153,8 @@ object DocStream {
     * that many uncompacted dfd deltas accumulate, the sink runs
     * [[compactBm25Index]] before returning — between batches of the
     * single-writer stream, so the quiet-boundary contract holds with no
-    * manual compaction call (steady state measured once over 500+
-    * batches, PERF.md r10: load wall and file count stay bounded). */
+    * manual compaction call; load wall and file count stay bounded
+    * however many batches the stream runs. */
   def bm25IndexSink(path: String, autoCompactEvery: Int = 0)
   : (DataFrame, Long) => Unit = (batch, batchId) => {
     graft.operators.Checkpoints.releasingScoped {
@@ -166,7 +166,7 @@ object DocStream {
       if (!compactedThrough(batch.sparkSession, path).exists(batchId <= _)) {
         // buildBm25Index one-shot-truncates the tf relation; with a
         // reliable checkpoint dir configured a long-running stream would
-        // otherwise accumulate one directory per micro-batch (r8 ADVICE).
+        // otherwise accumulate one directory per micro-batch.
         // The scoped release deletes exactly this batch's checkpoints
         // once the three writes below have consumed them.
         val idx = graft.operators.CurationQueries.buildBm25Index(batch)
@@ -253,7 +253,7 @@ object DocStream {
                        path: String): Option[Long] =
     readLongMarker(spark, path, "_compacted_through")
 
-  /** Delta-volume auto-compaction cadence (r9 verdict task #1): run
+  /** Delta-volume auto-compaction cadence: run
     * `compact` when the number of uncompacted delta batches under
     * `deltaDir` (ids above the store's current watermark `floor`)
     * reaches `every`; `every = 0` disables. Invoked by the sinks AFTER
@@ -261,7 +261,7 @@ object DocStream {
     * single-writer stream is between batches at that point, so the
     * compactors' quiet-boundary contract holds by construction and a
     * deployment on the reference's 5 s trigger never needs an operator
-    * to intervene (PERF r9's "posting-volume cadence" made code).
+    * to intervene.
     *
     * The trigger counts DELTA DIRS, not `batchId % every`: a modulo
     * fires on replayed batch ids (double compaction after every
@@ -273,9 +273,8 @@ object DocStream {
     * floor count too — harmless: compaction folds only committed
     * batches and the next cadence check re-fires until the replay
     * lands. `floor` is BY-NAME: with the cadence off (every = 0) the
-    * sinks must not pay its marker reads per batch (r10 review —
-    * 1-2 GETs per trigger on an object store, for a disabled
-    * feature). */
+    * sinks must not pay its marker reads per batch (1-2 GETs per
+    * trigger on an object store, for a disabled feature). */
   private[streaming] def autoCompact(spark: org.apache.spark.sql.SparkSession,
                                      every: Int, deltaDir: String,
                                      floor: => Long)(compact: => Unit): Unit =
@@ -491,7 +490,7 @@ object DocStream {
     * batch; the next load heals it). Bounded by a single batch —
     * inherent to a multi-relation store with no cross-file transaction.
     *
-    * Reader/COMPACTION contract (r9 ADVICE): a load must not SPAN a
+    * Reader/COMPACTION contract: a load must not SPAN a
     * compaction — the returned relations read the snapshot and delta
     * paths lazily, and compaction RETIRES folded deltas and superseded
     * snapshots after committing the new watermark, so an action run
@@ -506,8 +505,7 @@ object DocStream {
     * paths. The markers make a generation-count grace trivial: old
     * snapshots are keyed (`through=`/`basev=`), so retirement may
     * simply lag one compaction behind the flip. */
-  /** Offline init of the streamed BM25 store (r10 verdict task #3) —
-    * the registry face of the persisted-index deployment: write the
+  /** Offline init of the streamed BM25 store — the registry face of the persisted-index deployment: write the
     * corpus as ONE committed batch in the [[bm25IndexSink]] layout,
     * compact it (token-clustered tfsnap, folded df/totals snapshots),
     * and mark the store ready. Idempotent and crash-safe: the ready
@@ -587,7 +585,7 @@ object DocStream {
     else None
   }
 
-  /** Compact the streamed BM25 index (r8 verdict task #3): fold the
+  /** Compact the streamed BM25 index: fold the
     * df/totals deltas accumulated since the last watermark into fresh
     * `through=<w>` snapshots, CONSOLIDATE the posting (`tf`) partitions
     * into a token-clustered `tfsnap` snapshot, commit the watermark,
@@ -694,10 +692,10 @@ object DocStream {
       .filter(_._1 < w).foreach { case (_, p) => fs.delete(p, true) }
   }
 
-  // ── streaming PREFIX-INDEX maintenance (r8 verdict task #4): the
-  // bm25IndexSink discipline applied to the incremental-dedup index,
-  // completing the q80 deployment loop that previously ended at a
-  // write-once [[graft.operators.DedupQueries.PrefixIndex]] ──
+  // ── streaming PREFIX-INDEX maintenance: the bm25IndexSink
+  // discipline applied to the incremental-dedup index, so the q80
+  // deployment loop maintains its [[graft.operators.DedupQueries.PrefixIndex]]
+  // instead of writing it once ──
 
   /** Write the base [[graft.operators.DedupQueries.PrefixIndex]] for a
     * corpus snapshot — the ONE-TIME build the stream then maintains.
@@ -716,7 +714,7 @@ object DocStream {
     }
     // eager element bloom: the first micro-batch must not pay the
     // screen's vocabulary pass (first-trigger latency is part of the
-    // composed session's floor, r10 task #1)
+    // composed session's floor)
     buildElementBloom(docs.sparkSession, path,
       loadStreamedPrefixIndex(docs.sparkSession, path))
     ()
@@ -729,7 +727,7 @@ object DocStream {
     idx.arrays.write.mode("overwrite").parquet(s"$path/basev=$v/arrays")
   }
 
-  // ── the entry-element bloom face (r10 verdict task #1): a compact,
+  // ── the entry-element bloom face: a compact,
   // persisted Bloom filter over xxhash64 of the index's DISTINCT entry
   // elements. The sink's lossless pre-screen probes it per batch row;
   // soundness invariant: the persisted bloom is a SUPERSET of the
@@ -962,7 +960,7 @@ object DocStream {
       val spark = batch.sparkSession
       val idx = loadStreamedPrefixIndex(spark, path, Some(batchId))
       val arrs = DedupQueries.tokenArrays(batch)
-      // r10 verdict task #1 — the q111 bloom discipline applied to the
+      // the q111 bloom discipline applied to the
       // q80 probe: a LOSSLESS pre-screen on the index's entry-element
       // set. By the prefix-filter theorem a true pair (Jaccard ≥ t)
       // shares an element of the INDEX doc's prefix — i.e. an entry

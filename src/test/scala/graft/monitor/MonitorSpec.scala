@@ -119,6 +119,47 @@ class MonitorSpec extends SparkSpec {
     assert(scans.size == 1, board.queryExecution.executedPlan)
   }
 
+  /** A temp copy of gtfs_tiny, so a spec can rewrite its files. */
+  private def scheduleCopy(prefix: String): java.nio.file.Path = {
+    val dir = tempDir(prefix)
+    copyTree(java.nio.file.Paths.get("fixtures/gtfs_tiny"), dir)
+    dir
+  }
+
+  private def boardTrips(s: GtfsStatic.Schedule, preds: org.apache.spark.sql.DataFrame) =
+    Monitor.departureBoard(preds, s.trips, s.routes, s.stopTimes,
+      stopIds = Seq("s2", "s8"),
+      minTime = Timestamp.valueOf("2024-03-15 08:00:00"),
+      maxTime = Timestamp.valueOf("2024-03-15 09:30:00"))
+      .select("trip_id").collect().map(_.getString(0)).toSeq
+
+  test("an edited stop_times.txt changes which rows the next board drops under F7") {
+    val dir = scheduleCopy("board_edit")
+    assert(boardTrips(GtfsStatic.read(spark, dir.toString), predictions) == Seq("tA1", "tA2"))
+    // tB1 gains a stop after s8, so its s8 row is no longer a final stop
+    Files.write(dir.resolve("stop_times.txt"),
+      "tB1,12:50:00,12:51:00,s9,4\n".getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    assert(boardTrips(GtfsStatic.read(spark, dir.toString), predictions) ==
+      Seq("tA1", "tA2", "tB1"))
+  }
+
+  test("a warm board reads its schedule dimensions from the memo: at most 4 jobs") {
+    val path = tempDir("board_warm").resolve("p").toString
+    predictions.write.parquet(path)
+    val s = GtfsStatic.read(spark, scheduleCopy("board_warm_gtfs").toString)
+    def kind = graft.operators.SharedRelations.byKind.find(_.kind == "boarddims")
+    val misses = kind.fold(0L)(_.misses)
+    assert(boardTrips(s, spark.read.parquet(path)) == Seq("tA1", "tA2"))
+    assert(kind.get.misses == misses + 1)
+    assert(kind.get.residentBytes > 0, "the dimensions are cached once a board reads them")
+    val hits = kind.get.hits
+    val preds = spark.read.parquet(path) // its schema inference runs a job
+    val jobs = jobsDuring(assert(boardTrips(s, preds) == Seq("tA1", "tA2")))
+    assert(jobs <= 4, s"a warm board ran $jobs jobs")
+    assert(kind.get.hits == hits + 1 && kind.get.misses == misses + 1)
+  }
+
   test("quantile markers and curve UDFs match the pure curve math") {
     import spark.implicits._
     val pts = curve((0f, 0.0f), (60f, 0.5f), (120f, 1.0f))
