@@ -30,7 +30,7 @@ final case class DefaultCurveRow(route_type: Int, route_section: Int,
   * re-expressed as one declarative Spark job per output table instead of the
   * reference's per-route driver loops:
   *
-  *   records ⋈ schedule stop lists → gap-filled projections (W1)
+  *   records ⋈ compiled stop lists (tripStops) → gap-filled projections (W1)
   *     → groupBy (variant, stop, slot, event)         → general curves (A8)
   *     → self-join on vehicle → groupBy stop pairs    → curve sets (J3+A7)
   *   records → groupBy (route_type, section, slot, event, variant) → leaves
@@ -48,20 +48,6 @@ object DelayAnalysis {
 
   import org.apache.spark.sql.Encoders
 
-  /** Per-trip scheduled stop list with dense stop_index, stop count and
-    * scheduled event seconds. */
-  def scheduleStops(schedule: GtfsStatic.Schedule): DataFrame = {
-    val w = Window.partitionBy(col("trip_id")).orderBy(col("stop_sequence"))
-    val wc = Window.partitionBy(col("trip_id"))
-    schedule.stopTimes
-      .withColumn("stop_index", row_number().over(w) - 1)
-      .withColumn("stop_count", count(lit(1)).over(wc).cast("int"))
-      .withColumn("arrival_secs", GtfsTime.timeToSecondsColumn(col("arrival_time")))
-      .withColumn("departure_secs", GtfsTime.timeToSecondsColumn(col("departure_time")))
-      .select("trip_id", "stop_sequence", "stop_id", "stop_index", "stop_count",
-        "arrival_secs", "departure_secs")
-  }
-
   /** W1 gap-fill (reference `compute_projections_for_route_variant`,
     * `src/analyser/specific_curves.rs:158-252`): right-join each vehicle's
     * records onto its scheduled stop list, then carry the last seen delays
@@ -76,7 +62,8 @@ object DelayAnalysis {
     * documented intent — every observation kept, only MISSING stops receive
     * the last seen delays. */
   def projectedRecords(records: DataFrame, schedule: GtfsStatic.Schedule): DataFrame = {
-    val stops = scheduleStops(schedule)
+    val stops = schedule.tripStops.select("trip_id", "stop_sequence", "stop_id",
+      "stop_index", "stop_count", "arrival_secs", "departure_secs")
     val vehicles = records
       .select("source", "route_id", "route_variant", "trip_id",
         "trip_start_date", "trip_start_time")
@@ -306,7 +293,7 @@ object DelayAnalysis {
   def defaultCurves(records: DataFrame, schedule: GtfsStatic.Schedule,
                     routes: DataFrame): DataFrame = {
     val spark = records.sparkSession
-    val stops = scheduleStops(schedule)
+    val stops = schedule.tripStops
       .select("trip_id", "stop_sequence", "stop_index", "stop_count",
         "arrival_secs", "departure_secs")
     val based = records

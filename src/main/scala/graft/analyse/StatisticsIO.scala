@@ -64,7 +64,8 @@ object StatisticsIO {
   def computeAndSave(records: DataFrame, schedule: graft.gtfs.GtfsStatic.Schedule,
                      baseDir: String): Statistics = {
     val projected = DelayAnalysis.projectedRecords(records, schedule)
-    // the projection feeds three aggregations: materialize it once
+    // the projection feeds two aggregations (A9 reads the raw records):
+    // materialize it once
     projected.persist()
     try {
       save(baseDir,

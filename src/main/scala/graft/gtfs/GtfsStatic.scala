@@ -62,11 +62,19 @@ object GtfsStatic {
     else spark.read.option("header", "true").schema(schema).csv(path)
   }
 
-  /** A loaded schedule: the five core tables plus the derived
-    * trip -> route_variant mapping. */
+  /** A loaded schedule: the six tables as read, plus the compiled stop
+    * list of every trip ([[GtfsStatic.tripStops]]) that every verb reads. */
   final case class Schedule(stops: DataFrame, routes: DataFrame, trips: DataFrame,
                             stopTimes: DataFrame, calendar: DataFrame,
                             calendarDates: DataFrame) {
+    /** Every trip's ordered stop list ([[GtfsStatic.tripStops]]). */
+    def tripStops: DataFrame = GtfsStatic.tripStops(trips, stopTimes)
+
+    /** trip_id, route_id and route_variant, one row per trip with stop
+      * times: the first-stop rows of [[tripStops]]. */
+    def tripRoutes: DataFrame = tripStops.filter(col("stop_index") === 0)
+      .select("trip_id", "route_id", "route_variant")
+
     /** trips enriched with route_variant (see [[routeVariants]]). */
     lazy val tripsWithVariant: DataFrame =
       trips.join(routeVariants(trips, stopTimes), Seq("trip_id"))
@@ -80,34 +88,81 @@ object GtfsStatic {
     calendar = csv(spark, dir, "calendar.txt", calendarSchema, required = false),
     calendarDates = csv(spark, dir, "calendar_dates.txt", calendarDatesSchema, required = false))
 
-  /** Derive `route_variant`: one id per distinct ordered stop_id sequence
-    * within a route (the reference gets this from its forked gtfs-structures
-    * crate; usage at `src/analyser/specific_curves.rs:123`). Deterministic
-    * across runs and cluster layouts because it is a content hash of
-    * (route_id, ordered stop sequence), not a rank — variants keyed this way
-    * can be persisted and re-derived stably.
+  /** The compiled schedule: every trip's stop list, ordered by
+    * (stop_sequence, stop_id), one row per stop with
+    *  - trip_id, route_id, route_variant;
+    *  - stop_sequence, stop_id, stop_index (0-based position in the
+    *    order), stop_count;
+    *  - arrival_secs, departure_secs (seconds after the service day's
+    *    midnight, past 24 h for after-midnight stops; null when
+    *    `stopTimes` carries no such column);
+    *  - first_departure_secs: the departure seconds of stop_index 0, the
+    *    trip run's start time (the GTFS-RT trip descriptor's start_time).
     *
-    * Returns (trip_id, route_variant LongType). One shuffle: the groupBy on
-    * trip_id; the stop-sequence ordering happens inside `array_sort` on the
-    * collected per-trip list, so no global sort is needed.
-    */
-  def routeVariants(trips: DataFrame, stopTimes: DataFrame): DataFrame = {
-    val seqPerTrip = stopTimes
-      .select(col("trip_id"), struct(col("stop_sequence"), col("stop_id")).as("s"))
-      .groupBy("trip_id")
-      .agg(array_sort(collect_list(col("s"))).as("stops_sorted"))
-      // STRUCTURAL serialization (JSON array, quoted + escaped elements),
-      // immune to concatenation ambiguity for ANY stop_id content —
-      // route_variant keys every persisted statistics table, so the key
-      // must be injective in the stop sequence
-      .select(col("trip_id"),
-        to_json(transform(col("stops_sorted"), _.getField("stop_id"))).as("stop_seq_key"))
-    trips.select(col("trip_id"), col("route_id"))
-      .join(seqPerTrip, Seq("trip_id"))
-      // abs() keeps it in the positive u64-like range the reference uses
-      .select(col("trip_id"),
-        abs(xxhash64(col("route_id"), col("stop_seq_key"))).as("route_variant"))
-  }
+    * `route_variant` is one id per distinct ordered stop_id sequence
+    * within a route (the reference gets it from its forked gtfs-structures
+    * crate; usage at `src/analyser/specific_curves.rs:123`):
+    * `abs(xxhash64(route_id, to_json(stop_ids)))`. A content hash, not a
+    * rank, so it is the same across runs and cluster layouts, and it keys
+    * every persisted statistics table. The JSON array (quoted, escaped
+    * elements) keeps the key injective in the stop sequence for any
+    * stop_id content; a plain concatenation would not be.
+    *
+    * A trip's route_id comes from `trips`, keyed by trip_id; stop times
+    * of a trip missing from `trips` are not in the relation. Stop times
+    * and trips are grouped per trip in one shuffle, and the result is one
+    * persisted [[graft.operators.SharedRelations]] entry per snapshot of
+    * the two inputs' files: every verb that reads the same schedule files
+    * reads this one relation, and a rewritten schedule file is a miss and
+    * a rebuild, never a stale stop list. */
+  def tripStops(trips: DataFrame, stopTimes: DataFrame): DataFrame =
+    graft.operators.SharedRelations.group("tripstops", Seq(trips, stopTimes), 0, 0) {
+      val spark = trips.sparkSession
+      def secs(c: String): Column =
+        if (stopTimes.columns.contains(c)) graft.model.GtfsTime.timeToSecondsColumn(col(c))
+        else lit(null).cast(IntegerType)
+      val stop = struct(col("stop_sequence"), col("stop_id"),
+        secs("arrival_time").as("arrival_secs"), secs("departure_time").as("departure_secs"))
+      // the trips ride in the same shuffle as the stop times (a union, not
+      // a join): one exchange keyed by trip_id builds both sides. Its
+      // partition count is fixed at the session's shuffle partitions: a
+      // cached plan keeps its exchange's count (adaptive execution does
+      // not coalesce it), and the hash partitioning on trip_id is what
+      // later joins on trip_id reuse
+      val timed = stopTimes.select(col("trip_id"), stop.as("s"),
+        lit(null).cast(StringType).as("route_id"), lit(false).as("in_trips"))
+      val perTrip = timed
+        .unionByName(trips.select(col("trip_id"),
+          lit(null).cast(timed.schema("s").dataType).as("s"),
+          col("route_id"), lit(true).as("in_trips")))
+        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("trip_id"))
+        .groupBy("trip_id")
+        // sorting the structs sorts by (stop_sequence, stop_id) first; the
+        // seconds only order exact duplicates, whose stop_ids are equal
+        .agg(array_sort(collect_list(col("s"))).as("stops"),
+          max(col("route_id")).as("route_id"), max(col("in_trips")).as("in_trips"))
+        .filter(col("trip_id").isNotNull && col("in_trips") && size(col("stops")) > 0)
+      Seq(perTrip
+        .select(col("trip_id"), col("route_id"),
+          // abs() keeps it in the positive u64-like range the reference uses
+          abs(xxhash64(col("route_id"),
+            to_json(transform(col("stops"), _.getField("stop_id"))))).as("route_variant"),
+          size(col("stops")).as("stop_count"),
+          col("stops").getItem(0).getField("departure_secs").as("first_departure_secs"),
+          posexplode(col("stops")).as(Seq("stop_index", "s")))
+        .select(col("trip_id"), col("route_id"), col("route_variant"),
+          col("s.stop_sequence").as("stop_sequence"), col("s.stop_id").as("stop_id"),
+          col("stop_index"), col("stop_count"),
+          col("s.arrival_secs").as("arrival_secs"),
+          col("s.departure_secs").as("departure_secs"), col("first_departure_secs"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }.head
+
+  /** (trip_id, route_variant LongType): the first-stop rows of
+    * [[tripStops]], one per trip with stop times. */
+  def routeVariants(trips: DataFrame, stopTimes: DataFrame): DataFrame =
+    tripStops(trips, stopTimes).filter(col("stop_index") === 0)
+      .select("trip_id", "route_variant")
 
   /** Which services run on which days of [from, from+days): one
     * (service_id, service_date) row per running service and day (reference

@@ -92,8 +92,7 @@ object RtIngest {
     */
   def records(obs: Dataset[RtObservation], schedule: GtfsStatic.Schedule,
               source: String, scheduleFileName: String): DataFrame = {
-    val trips = schedule.tripsWithVariant
-      .select(col("trip_id"), col("route_id"), col("route_variant"))
+    val trips = schedule.tripRoutes
     val w = Window.partitionBy(RecordKey.map(col): _*)
       .orderBy(col("time_of_recording").desc)
     obs.toDF()
@@ -123,12 +122,21 @@ object RtIngest {
     * against that schedule's own trip table and union. The per-schedule
     * loop is driver-side over a handful of schedule versions (dimension
     * cardinality); the data path stays one decode scan + one broadcast
-    * join per schedule. */
+    * join per schedule.
+    *
+    * The decoded observations are read by every schedule branch, so they
+    * are one persisted `rtobs` memo entry per snapshot of the directory's
+    * files: importing the same directory again reuses them, a rewritten
+    * feed directory is a miss and a rebuild, and the memo's bound retires
+    * them (the entry is keyed by the binaryFile relation, whose plan
+    * compares equal across calls; the decode's closure never does). */
   def recordsMultiSchedule(spark: SparkSession, rtDir: String,
                            schedules: Map[String, GtfsStatic.Schedule],
                            source: String): DataFrame = {
     import spark.implicits._
-    val obs = readFeeds(spark, rtDir).cache()
+    val files = spark.read.format("binaryFile").load(rtDir)
+    val obs = graft.operators.SharedRelations("rtobs", files, 0, 0)(
+      decodeFeeds(files).toDF()).as[RtObservation]
     val rtFiles = obs.select(col("rt_file")).distinct()
     val sched = schedules.keys.toSeq.toDF("schedule_file")
     // the assignment stays a DataFrame joined on rt_file — never collected:

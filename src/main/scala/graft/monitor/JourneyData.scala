@@ -3,7 +3,6 @@ package graft.monitor
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gtfs.GtfsStatic
-import graft.model.GtfsTime
 
 /** Journey-page lookups (reference `src/monitor/journey_data.rs` and
   * visual-schedule helpers — SURVEY.md J8, F12, W8, C17). */
@@ -38,9 +37,9 @@ object JourneyData {
       .join(broadcast(schedule.routes.filter(
         col("route_short_name") === routeShortName && col("route_type") === routeType)
         .select("route_id")), Seq("route_id"))
-      .join(schedule.stopTimes.filter(col("stop_id") === stopId)
-        .withColumn("dep_secs", GtfsTime.timeToSecondsColumn(col("departure_time")))
-        .select("trip_id", "stop_sequence", "dep_secs"), Seq("trip_id"))
+      .join(schedule.tripStops.filter(col("stop_id") === stopId)
+        .select(col("trip_id"), col("stop_sequence"), col("departure_secs").as("dep_secs")),
+        Seq("trip_id"))
       // match the absolute instant: service day + seconds may hit the target
       // with dep_secs or dep_secs±86400 on the neighbouring service day
       .filter(col("dep_secs") % 86400 === departureSecsOfDay % 86400)
@@ -147,21 +146,14 @@ object JourneyData {
     }
   }
 
-  /** Per-variant ordered stop-id lists (input to W8), one shuffle. */
-  def variantStopLists(schedule: GtfsStatic.Schedule): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("route_variant")).orderBy(col("rep_rank"))
-    schedule.tripsWithVariant
-      .select("trip_id", "route_id", "route_variant")
-      .withColumn("rep_rank",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("route_variant")).orderBy(col("trip_id"))))
-      .filter(col("rep_rank") === 1) // J5: representative trip per variant
-      .join(graft.analyse.DelayAnalysis.scheduleStops(
-        schedule).select("trip_id", "stop_index", "stop_id"), Seq("trip_id"))
+  /** Per-variant ordered stop-id lists (input to W8), one shuffle. Every
+    * trip of a variant has the same ordered stop ids (the variant is a
+    * hash of them), so the set of (stop_index, stop_id) pairs over the
+    * variant's trips is its one stop list. */
+  def variantStopLists(schedule: GtfsStatic.Schedule): DataFrame =
+    schedule.tripStops
       .groupBy("route_id", "route_variant")
-      .agg(array_sort(collect_list(struct(col("stop_index"), col("stop_id")))).as("s"))
+      .agg(array_sort(collect_set(struct(col("stop_index"), col("stop_id")))).as("s"))
       .select(col("route_id"), col("route_variant"),
         transform(col("s"), _.getField("stop_id")).as("stop_ids"))
-  }
 }

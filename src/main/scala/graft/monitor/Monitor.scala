@@ -127,18 +127,19 @@ object Monitor {
 
   /** The board's schedule dimensions, persisted once per snapshot of
     * the three inputs' files:
-    *  - per trip with stop times: `trip_id`, `last_seq` (its largest
-    *    stop_sequence) and `trip_headsign`, one row per `trips` row of
-    *    the trip (a null headsign when it has none), so an inner join on
-    *    trip_id keeps exactly the rows and multiplicities of F7's left
-    *    join plus J6's headsign join;
+    *  - per trip with stop times: `trip_id`, `last_seq` (the stop_sequence
+    *    of its last stop in [[graft.gtfs.GtfsStatic.tripStops]]) and
+    *    `trip_headsign`, one row per trip (a null headsign when it has
+    *    none), so an inner join on trip_id keeps exactly the rows of F7's
+    *    left join plus J6's headsign join;
     *  - per route: `route_id`, `route_short_name`, `route_type`. */
   private def boardDims(trips: DataFrame, routes: DataFrame,
                         stopTimes: DataFrame): (DataFrame, DataFrame) = {
+    val stops = graft.gtfs.GtfsStatic.tripStops(trips, stopTimes)
     val Seq(tripDims, routeDims) = graft.operators.SharedRelations.group(
         "boarddims", Seq(trips, stopTimes, routes), 0, 0) {
-      val lastStops = stopTimes.groupBy("trip_id")
-        .agg(max("stop_sequence").as("last_seq"))
+      val lastStops = stops.filter(col("stop_index") === col("stop_count") - 1)
+        .select(col("trip_id"), col("stop_sequence").as("last_seq"))
       Seq(lastStops.join(trips.select(col("trip_id"), col("trip_headsign")),
           Seq("trip_id"), "left"),
         routes.select(col("route_id"), col("route_short_name"), col("route_type")))

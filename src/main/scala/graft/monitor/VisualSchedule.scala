@@ -3,7 +3,6 @@ package graft.monitor
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.gtfs.GtfsStatic
-import graft.model.GtfsTime
 
 /** S9's data layer (reference `src/analyser/visual_schedule.rs` — the
   * whole-day route diagram of scheduled vs observed stop times; the PNG
@@ -35,16 +34,15 @@ object VisualSchedule {
 
     val trips = GtfsStatic.tripsForDate(schedule, date)
       .filter(col("route_id") === routeId)
-      .join(schedule.tripsWithVariant.select("trip_id", "route_variant"), Seq("trip_id"))
-      .join(broadcast(assignment), Seq("route_variant"))
-    val stops = graft.analyse.DelayAnalysis.scheduleStops(schedule)
+      .select("trip_id")
     val day = java.sql.Date.valueOf(date)
     val obs = records
       .filter(col("route_id") === routeId && col("trip_start_date") === day)
       .select(col("trip_id"), col("stop_sequence"),
         col("delay_arrival"), col("delay_departure"))
     trips
-      .join(stops, Seq("trip_id"))
+      .join(schedule.tripStops, Seq("trip_id"))
+      .join(broadcast(assignment), Seq("route_variant"))
       .join(obs, Seq("trip_id", "stop_sequence"), "left")
       .select(col("axis_variant"), col("route_variant"), col("trip_id"),
         col("stop_index"), col("stop_id"),

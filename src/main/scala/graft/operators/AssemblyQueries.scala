@@ -46,7 +46,7 @@ object AssemblyQueries {
         .as(Seq("pos", "chunk")))
       // enforce the documented pos < 2²⁰ precondition: past it the key
       // bleeds into doc_id+1's space and BOTH engines would agree on a
-      // wrong first occurrence — fail loudly instead (r7 review)
+      // wrong first occurrence — fail loudly instead
       .withColumn("k", when(col("pos") >= lit(1048576),
         raise_error(lit("spanDedupRewrite: document exceeds 2^20 chunks — " +
           "widen the first-occurrence key")))

@@ -47,12 +47,12 @@ object AuditQueries {
     * (Spark's count_distinct skips any-NULL argument rows, DuckDB's
     * DISTINCT over a row-value does not — so both sides filter
     * explicitly): a NULL key is a completeness defect, not a duplicate,
-    * and counting it here would double-book it (r7f review). */
+    * and counting it here would double-book it. */
   private def scalarAudit(df: DataFrame, table: String,
                           pk: Seq[Column], rules: (String, Column)*): DataFrame = {
     // coalesce: sum() over ZERO rows is NULL — an empty table must
-    // audit as 0 violations, not NULL (r7f review; the oracle
-    // coalesces identically)
+    // audit as 0 violations, not NULL (the oracle coalesces
+    // identically)
     val pkRule: Seq[(String, Column)] =
       if (pk.isEmpty) Seq.empty
       else {

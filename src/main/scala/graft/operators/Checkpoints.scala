@@ -18,10 +18,10 @@ import org.apache.spark.sql.DataFrame
   * This helper picks the strategy from the session: reliable `checkpoint`
   * when a checkpoint dir is set, `localCheckpoint` otherwise. Both are
   * eager, so callers may `unpersist` upstream caches immediately after.
-  * The fault-tolerance claim was measured once, not gated: an executor
-  * SIGKILLed mid-iteration on a local-cluster master was relaunched by
-  * its worker and components completed correctly (PERF.md r8). No
-  * automated check exercises executor loss.
+  * The fault-tolerance claim rests on one measured run, not a gate: an
+  * executor SIGKILLed mid-iteration on a local-cluster master was
+  * relaunched by its worker and components completed correctly
+  * (PERF.md). No automated check exercises executor loss.
   *
   * Storage discipline: Spark never deletes reliable checkpoint data on its
   * own (the ContextCleaner only does so under
@@ -34,11 +34,11 @@ import org.apache.spark.sql.DataFrame
   * deleted eagerly) REGISTER their directory instead: a runner that knows
   * the consuming action has completed calls [[releaseOneShots]] — the
   * `Verify` registry runner does after every query — so directories
-  * never accumulate across invocations (r7 ADVICE task #2). Streaming
+  * never accumulate across invocations. Streaming
   * sinks must NOT use the global sweep (their micro-batch may run
   * concurrently with a query whose one-shots are still live); they wrap
   * each batch in [[releasingScoped]], which deletes exactly the
-  * checkpoints that batch registered (r8 ADVICE).
+  * checkpoints that batch registered.
   */
 object Checkpoints {
 
@@ -91,8 +91,8 @@ object Checkpoints {
     * Call only when every action consuming plans built inside `body`
     * completes inside `body` (the sink's writes do). The claim is
     * registration-window AND same-thread: in a COMPOSED session several
-    * sinks' micro-batches overlap (r10 — the automatic mode plus three
-    * index sinks share one SparkSession), and a window-only claim would
+    * sinks' micro-batches overlap (the automatic mode and the index
+    * sinks may share one SparkSession), and a window-only claim would
     * steal a concurrent sink's just-registered checkpoint and delete
     * storage its still-running writes read. Each foreachBatch body runs
     * driver-side on its own microbatch thread, so thread identity is

@@ -32,11 +32,11 @@ object ConnectedComponents {
 
   /** max→min orientation with self-loops dropped — the canonical edge
     * form both star operations preserve. Duplicate rows are NOT merged
-    * here (r11): every registry edge relation is a verified unique pair
-    * set (distinct candidates → per-pair verification), so the former
-    * round-0 `.distinct()` was one full shuffle of the LARGEST relation
-    * the operator ever touches (the q125 corpus-wide edge set is 2.9 M
-    * rows at sf0.1) for nothing. Correctness does not depend on it:
+    * here: every registry edge relation is a verified unique pair set
+    * (distinct candidates → per-pair verification), and a round-0
+    * `.distinct()` would be one full shuffle of the LARGEST relation the
+    * operator ever touches (the q125 corpus-wide edge set is 2.9 M rows
+    * at sf0.1) for nothing. Correctness does not depend on it:
     * both star operations are set-semantic — min-aggregates are
     * duplicate-insensitive and each ends in its own `.distinct()` — so
     * a caller that does pass duplicate edges converges to the identical
@@ -45,7 +45,7 @@ object ConnectedComponents {
     * test is also safe: the round-0 checksum counts physical rows, so a
     * dup-carrying input can never collide with its deduplicated
     * round-1 successor. Note for SYMMETRIZED inputs ((a,b) and (b,a)
-    * both present — a common external edge representation, ADVICE r11):
+    * both present — a common external edge representation):
     * orient maps both to the same row, and identical rows cancel
     * pairwise under the checksum's xor — the "edge set is distinct so
     * xor never cancels" hardening below does not apply to round 0 of
@@ -90,7 +90,7 @@ object ConnectedComponents {
   def starForest(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     // cycle, not plain truncate: each round's checkpoint data is deleted
     // as soon as the next round supersedes it — a k-round run retires one
-    // directory (the returned forest's), not k (ADVICE r6)
+    // directory (the returned forest's), not k
     val ckpt = Checkpoints.cycle()
     var e = ckpt.truncate(orient(edges))
     // fixpoint = star forest (both ops leave stars unchanged); detected by

@@ -226,7 +226,7 @@ object GtfsPipeline {
        |WHERE a.trip_id <> d.trip_id
        |ORDER BY arrival_trip, departure_trip""".stripMargin
 
-  /** The q42s oracle (r10 verdict stretch #8): the scheduled-prediction
+  /** The q42s oracle: the scheduled-prediction
     * LADDER resolved for EVERY request row — both event types, all
     * stops, the full 2-day horizon — to its integer facts (precision
     * code + sample size). Scheduled requests carry no realtime basis,
@@ -272,7 +272,7 @@ object GtfsPipeline {
        |FROM resolved
        |ORDER BY trip_start_date, trip_id, stop_sequence, event_type""".stripMargin
 
-  /** The q41s oracle (r10 verdict stretch #8): the q53 pair-stream facts
+  /** The q41s oracle: the q53 pair-stream facts
     * RE-KEYED by the structural route variant — the ordered stop list,
     * i.e. the injective PREIMAGE of the xxhash64 route_variant, which IS
     * SQL-derivable where the hash is not. Verifies that q41's curve-set
@@ -434,8 +434,7 @@ object GtfsPipeline {
       },
       None),
 
-    // q41's INTEGER-FACT skeleton (r10 verdict stretch #8, the q82/q83
-    // pattern): the curve-set group universe — variant attribution, F9
+    // q41's INTEGER-FACT skeleton (the q82/q83 pattern): the curve-set group universe — variant attribution, F9
     // >20 gate, Default-slot duplication, exact integer delay sums —
     // re-keyed by the STRUCTURAL route variant (the ordered stop list,
     // the injective preimage of the xxhash64 route_variant) so DuckDB
@@ -461,7 +460,7 @@ object GtfsPipeline {
       },
       Some(curvesetSkeletonSql)),
 
-    // q42's INTEGER-FACT skeleton (r10 verdict stretch #8): every
+    // q42's INTEGER-FACT skeleton: every
     // scheduled-prediction row's ladder resolution — precision code +
     // sample size per (trip, date, stop, event) — re-derived in DuckDB
     // over the GTFS CSVs + the golden records arithmetic (the q82
@@ -554,7 +553,7 @@ object GtfsPipeline {
       },
       None),
 
-    // q50's INTEGER-FACT surrogate (r7, mirroring what q53/q55 do for the
+    // q50's INTEGER-FACT surrogate (mirroring what q53/q55 do for the
     // analysis pipeline): the same departureBoard operator run end to end,
     // projecting only SQL-derivable facts — row keys, J6 metadata, the
     // precision/origin codes, sample sizes, and the prediction window as
@@ -592,7 +591,7 @@ object GtfsPipeline {
       },
       Some(boardSkeletonSql)),
 
-    // q51's INTEGER-FACT surrogate (r7): the same transfersBanded operator
+    // q51's INTEGER-FACT surrogate: the same transfersBanded operator
     // with the probability column DROPPED — with minProbability = 0.0 the
     // F8 floor keeps every scored pair, so the output row set is exactly
     // the relational skeleton (stop-pair equi-join through the walkable

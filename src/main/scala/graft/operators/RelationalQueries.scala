@@ -42,8 +42,7 @@ object QueryDef {
     * the best match by (highest `scoreCol`, ties to the SMALLEST
     * `matchCol` id — `max(struct(score, -id))`, exactly the MIN(id)-at-
     * MAX(score) the oracles compute). One definition so a tie-break
-    * change reaches every consumer (r10 review: three inlined copies
-    * had appeared). Map-side combinable; ordered per-key output. */
+    * change reaches every consumer. Map-side combinable; ordered per-key output. */
   private[graft] def bestMatchRollup(matches: DataFrame, keyCol: String,
                                      matchCol: String, scoreCol: String,
                                      nName: String, bestName: String,
@@ -78,7 +77,7 @@ object RelationalQueries {
 
   /** l_extendedprice as exact integer cents — the shared value domain of
     * the exact (q75/q76) and sketch (q122) order-statistic rungs; one
-    * definition so the rungs cannot drift (r7f review). */
+    * definition so the rungs cannot drift. */
   private def priceCents: Column =
     (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
 
@@ -219,7 +218,7 @@ object RelationalQueries {
              |    ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
              |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin)),
 
-    // ── W-family extension (r7b): gap-based sessionization — the classic
+    // ── W-family extension: gap-based sessionization — the classic
     //    clickstream operator (new session when a user is idle > 2 h),
     //    lag → flag → running-sum session id → per-session rollup. Both
     //    windows partition by user_id (group size bounded by one user's
@@ -240,7 +239,7 @@ object RelationalQueries {
           .agg(count(lit(1)).as("n_events"),
             min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"),
             // integer div, not `/`: Column./ is DOUBLE division, whose
-            // truncation can cross an integer for huge spans (r7 review)
+            // truncation can cross an integer for huge spans
             expr("(max(us) - min(us)) div 1000000").as("duration_s"))
           .orderedOutput(col("user_id"), col("session_id"))
       },
@@ -257,7 +256,7 @@ object RelationalQueries {
              |  (MAX(us) - MIN(us)) // 1000000 AS duration_s
              |FROM s GROUP BY 1, 2 ORDER BY user_id, session_id""".stripMargin)),
 
-    // ── sessionization via Spark's NATIVE session_window (r7e):
+    // ── sessionization via Spark's NATIVE session_window:
     //    q91's twin over the built-in operator. Same split semantics as
     //    q91 (TOUCHING [ts, ts+gap) windows merge — measured and
     //    spec-pinned at the exact boundary — so a new session needs
@@ -281,7 +280,7 @@ object RelationalQueries {
              |FROM s GROUP BY user_id, sid
              |ORDER BY user_id, w_start""".stripMargin)),
 
-    // ── funnel analysis (r7b): first view → first later click → first
+    // ── funnel analysis: first view → first later click → first
     //    later purchase per user. Three chained filtered-min aggregates
     //    joined on user_id — NO window, no per-user sort; each stage is a
     //    map-side-combinable min. "Later" = strictly greater microsecond
@@ -788,7 +787,7 @@ object RelationalQueries {
     //    not a gap — so a dying feed's empty hours score z ≪ 0 instead
     //    of silently dropping out of both the baseline and the scored
     //    set, and the trailing 24 rows always span exactly 24 wall-
-    //    clock hours (the r7 ADVICE finding). The window runs over the
+    //    clock hours. The window runs over the
     //    densified HOURLY AGGREGATE — still dimension-sized (the axis
     //    is types × span-hours, ~9k rows/type/year), so the per-type
     //    ordered window never touches row-scale data; z is one fixed

@@ -20,17 +20,16 @@ import org.apache.spark.sql.functions._
   * each embarrassingly parallel with map-side partial aggregation; no
   * data shuffle, no per-group funnel, driver state is groups × 1.
   *
-  * r11 (guide §1.2 — fewer passes): callers that need SEVERAL ranks over
-  * the same data (q121's two terciles, q97's two quartiles) previously
-  * ran the whole refinement once per rank — 2 × (init + ~5 rounds) driver
-  * round-trips. [[kthSmallestRanks]] now refines ALL ranks jointly: one
-  * init pass, and per round ONE aggregate job that carries the rank
-  * index through the histogram key. Round 1's histogram is computed once
-  * WITHOUT the rank axis (every rank starts from the same empty prefix)
-  * and served to all ranks; later rounds join the per-(rank, group)
-  * prefix table (broadcast, dimension-sized) so each rank's rows are
-  * counted under its own prefix. The per-rank pick logic is unchanged,
-  * so results are identical to the sequential loop. */
+  * Callers that need SEVERAL ranks over the same data (q121's two
+  * terciles, q97's two quartiles) use [[kthSmallestRanks]], which refines
+  * ALL ranks jointly rather than once per rank: one init pass, and per
+  * round ONE aggregate job that carries the rank index through the
+  * histogram key. Round 1's histogram is computed once WITHOUT the rank
+  * axis (every rank starts from the same empty prefix) and served to all
+  * ranks; later rounds join the per-(rank, group) prefix table
+  * (broadcast, dimension-sized) so each rank's rows are counted under
+  * its own prefix. The per-rank pick logic is the single-rank one, so
+  * results are identical to refining each rank on its own. */
 object Selection {
 
   /** The k-th smallest (1-based, k = kOfN(group count)) of `valueCol`
@@ -70,7 +69,7 @@ object Selection {
     if (init.isEmpty)
       return kOfNs.map(_ => Seq.empty[(String, Long)].toDF(groupCol, valueCol))
     // misuse must fail HERE with a named group, not several distributed
-    // passes later as an opaque 'selection invariant broken' (ADVICE r6);
+    // passes later as an opaque 'selection invariant broken';
     // a null group key would also NPE at getString below
     val ranks = kOfNs.indices
     init.foreach { r =>

@@ -13,68 +13,33 @@ import graft.model.{EventType, GtfsTime, OriginType}
   * Specific/FallbackSpecific where stop-pair curve sets exist. */
 object RealtimePredictions {
 
-  /** The STATIC side of the realtime prediction path, materialized once
-    * and reused across micro-batches, so no batch rebuilds the
-    * schedule-derived relations (tripsWithVariant's stop-walk aggregation
-    * among them) or re-plans the statistics joins. All members are
-    * persisted and eagerly materialized by [[buildContext]]; re-broadcasting
-    * per batch then serializes memory blocks instead of recomputing plans.
-    * A statistics refresh invalidates the whole context: call
-    * [[Context.invalidate]] and build a fresh one (the reference's
-    * importer likewise reloads its statistics snapshot wholesale,
-    * `src/importer/mod.rs`). */
-  final case class Context(stops: DataFrame, trips: DataFrame,
-                           general: DataFrame, curveSets: DataFrame,
-                           defaults: DataFrame, routes: DataFrame) {
-    /** Unpersist every cached member (after the queries consuming this
-      * context have stopped, or once a refreshed context replaces it). */
-    def invalidate(): Unit =
-      Seq(stops, trips, general, curveSets, defaults, routes)
-        .foreach { df => df.unpersist(); () }
-  }
-
-  /** Build and eagerly materialize a [[Context]]. */
-  def buildContext(schedule: GtfsStatic.Schedule,
-                   stats: graft.analyse.StatisticsIO.Statistics): Context = {
-    def mat(df: DataFrame): DataFrame = {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count()
-      p
-    }
-    Context(
-      mat(graft.analyse.DelayAnalysis.scheduleStops(schedule)),
-      mat(schedule.tripsWithVariant
-        .select("trip_id", "route_id", "route_variant")),
-      mat(stats.general), mat(stats.curveSets), mat(stats.defaults),
-      mat(schedule.routes))
-  }
-
   /** `work`: PredictionWork rows (trip_id, trip_start_date "yyyyMMdd",
     * trip_start_time "H:MM:SS", route_id, basis_stop_sequence, basis_delay,
     * time_of_recording). `now` gates trips started more than 12 h ago
-    * (F10, reference `per_schedule_importer.rs:250-253`). One-shot form:
-    * derives the static relations in-plan; the automatic mode uses the
-    * [[Context]] overload instead. */
+    * (F10, reference `per_schedule_importer.rs:250-253`).
+    *
+    * The static side is served from the memo, so a caller per micro-batch
+    * rebuilds nothing: the schedule's stop lists are its
+    * [[GtfsStatic.tripStops]] entry, and the statistics tables plus
+    * `routes` are one persisted `rtstats` group per snapshot of their
+    * files. A statistics refresh (`analyse` into the same directory, then
+    * `StatisticsIO.load`) is a miss and a rebuild, never stale curves. */
   def fromWork(work: DataFrame, schedule: GtfsStatic.Schedule,
                stats: graft.analyse.StatisticsIO.Statistics,
-               now: java.sql.Timestamp): DataFrame =
-    fromWork(work,
-      Context(graft.analyse.DelayAnalysis.scheduleStops(schedule),
-        schedule.tripsWithVariant
-          .select("trip_id", "route_id", "route_variant"),
-        stats.general, stats.curveSets, stats.defaults, schedule.routes),
-      now)
-
-  /** [[fromWork]] against a prebuilt [[Context]] — the per-micro-batch
-    * entry point. */
-  def fromWork(work: DataFrame, ctx: Context,
                now: java.sql.Timestamp): DataFrame = {
-    val stops = ctx.stops
+    val static = Seq(stats.general, stats.curveSets, stats.defaults, schedule.routes)
+    val Seq(general, curveSets, defaults, routes) =
+      graft.operators.SharedRelations.group("rtstats", static, 0, 0)(
+        static.map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    val stops = schedule.tripStops
     // route_id comes from the SCHEDULE trip, not the feed: GTFS-RT trip
     // descriptors may omit it (the reference likewise resolves the trip via
-    // the schedule before predicting, `predictor/mod.rs:191-196`)
-    val trips = ctx.trips
-    val base = work
+    // the schedule before predicting, `predictor/mod.rs:191-196`); the
+    // basis stop_sequence maps to its dense stop_index
+    val basis = stops.select(col("trip_id"), col("route_id"), col("route_variant"),
+      col("stop_sequence").as("basis_stop_sequence"),
+      col("stop_index").as("start_index"))
+    val withBasis = work
       .drop("route_id")
       .withColumn("trip_start_date", to_date(col("trip_start_date"), "yyyyMMdd"))
       .withColumn("trip_start_time",
@@ -82,15 +47,11 @@ object RealtimePredictions {
       // F10: trips that started >12h before `now` get no predictions
       .filter(GtfsTime.instantColumn(col("trip_start_date"), col("trip_start_time"))
         >= timestamp_add("HOUR", lit(-12), lit(now)))
-      .join(broadcast(trips), Seq("trip_id"))
-    // basis stop_sequence -> dense stop_index
-    val basisIdx = stops.select(col("trip_id"),
-      col("stop_sequence").as("basis_stop_sequence"),
-      col("stop_index").as("start_index"))
-    val withBasis = base.join(broadcast(basisIdx),
-      Seq("trip_id", "basis_stop_sequence"))
+      .join(broadcast(basis), Seq("trip_id", "basis_stop_sequence"))
     // fan out to all later stops x both event types
-    val later = withBasis.join(stops, Seq("trip_id"))
+    val later = withBasis.join(stops.select(col("trip_id"), col("stop_sequence"),
+        col("stop_id"), col("stop_index"), col("stop_count"),
+        col("arrival_secs"), col("departure_secs")), Seq("trip_id"))
       .filter(col("stop_index") > col("start_index"))
     val events = Seq(
       (EventType.Arrival, "arrival_secs"),
@@ -105,8 +66,7 @@ object RealtimePredictions {
         col("basis_delay").as("initial_delay"))
     }
     val requests = events.reduce(_ unionByName _)
-    Predictor.resolve(requests, ctx.general, ctx.curveSets, ctx.defaults,
-      ctx.routes)
+    Predictor.resolve(requests, general, curveSets, defaults, routes)
       // a basis without a departure delay can resolve to a whole curve SET;
       // the reference importer only stores single curves and bails on
       // CurveSetData (`per_schedule_importer.rs:338-341`) — drop set rows

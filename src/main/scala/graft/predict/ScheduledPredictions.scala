@@ -26,21 +26,16 @@ object ScheduledPredictions {
     * horizon (`days <= 0`) gives an empty relation. */
   def requests(spark: SparkSession, schedule: GtfsStatic.Schedule,
                from: LocalDate, days: Int): DataFrame = {
-    val stops = graft.analyse.DelayAnalysis.scheduleStops(schedule)
-    val trips = schedule.trips
+    // ONE vehicle identity per trip run: trip_start_time is the first
+    // stop's scheduled DEPARTURE for both event branches (the GTFS-RT trip
+    // descriptor's start_time). Deriving it per event type would give a
+    // vehicle two identities whenever the first stop has dwell, breaking
+    // the F6 realtime-shadow dedup and the A12 watermark.
+    val withStops = schedule.trips.select("trip_id", "service_id")
       .join(broadcast(GtfsStatic.serviceDays(schedule, from, days)), Seq("service_id"))
       .withColumnRenamed("service_date", "trip_start_date")
-      .join(schedule.tripsWithVariant.select("trip_id", "route_variant"), Seq("trip_id"))
-    // ONE vehicle identity per trip run: trip_start_time is the first stop's
-    // scheduled DEPARTURE for both event branches (the GTFS-RT trip
-    // descriptor's start_time). Deriving it per event type would give a
-    // vehicle two identities whenever the first stop has dwell, breaking the
-    // F6 realtime-shadow dedup and the A12 watermark.
-    val withStops = trips.join(stops, Seq("trip_id"))
-      .withColumn("trip_start_time",
-        first(col("departure_secs")).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("trip_id"), col("trip_start_date"))
-          .orderBy(col("stop_index"))))
+      .join(schedule.tripStops, Seq("trip_id"))
+      .withColumn("trip_start_time", col("first_departure_secs"))
     val events = Seq(
       (EventType.Arrival, "arrival_secs"),
       (EventType.Departure, "departure_secs")).map { case (et, secsCol) =>

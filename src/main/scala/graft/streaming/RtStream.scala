@@ -143,7 +143,11 @@ object RtStream {
     * ladder predictions, upserted last-wins into a
     * `trip_start_date`-partitioned predictions table. Returns (records
     * query, predictions query); stop both to shut the mode down. The two
-    * queries keep separate checkpoints under `checkpointBase`. */
+    * queries keep separate checkpoints under `checkpointBase`. Both read
+    * the schedule's stop lists, and the predictions query the statistics,
+    * from memo entries built on the first batch that needs them
+    * ([[GtfsStatic.tripStops]], `RealtimePredictions.fromWork`), so no
+    * batch rebuilds a static relation. */
   def startAutomatic(spark: SparkSession, rtDir: String,
                      schedule: GtfsStatic.Schedule,
                      stats: graft.analyse.StatisticsIO.Statistics,
@@ -154,22 +158,13 @@ object RtStream {
                        org.apache.spark.sql.streaming.Trigger.ProcessingTime("5 seconds"),
                      basisTtlMs: Long = 12L * 3600 * 1000,
                      now: () => java.sql.Timestamp =
-                       () => new java.sql.Timestamp(System.currentTimeMillis()),
-                     context: Option[graft.predict.RealtimePredictions.Context] =
-                       None)
+                       () => new java.sql.Timestamp(System.currentTimeMillis()))
   : (org.apache.spark.sql.streaming.StreamingQuery,
      org.apache.spark.sql.streaming.StreamingQuery) = {
     val recordsQuery = start(spark, rtDir, schedule, recordsPath,
       s"$checkpointBase/records", source, scheduleFileName, trigger)
     val predKey = Seq("route_id", "trip_id", "trip_start_date",
       "trip_start_time", "stop_sequence", "event_type")
-    // the static prediction side is materialized ONCE, not per batch:
-    // rebuilding the schedule/statistics relations per batch cost ~1-2 s
-    // of a 6-7 s batch median (PERF.md). Deployments that refresh their
-    // statistics pass `context` and own its lifecycle: build the new
-    // one, restart the query, invalidate() the old.
-    val ctx = context.getOrElse(
-      graft.predict.RealtimePredictions.buildContext(schedule, stats))
     val work = dedupPredictionWork(vehicleUpdates(observations(spark, rtDir)),
       ttlMs = basisTtlMs)
     val predictionsQuery = work.writeStream
@@ -178,7 +173,7 @@ object RtStream {
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[PredictionWork], _: Long) =>
         val preds = graft.predict.RealtimePredictions
-          .fromWork(batch.toDF(), ctx, now())
+          .fromWork(batch.toDF(), schedule, stats, now())
           // the reference's predictions upsert is plain replace-by-key;
           // the batch instant is the version for newest-write-wins
           .withColumn("computed_at", lit(now()))

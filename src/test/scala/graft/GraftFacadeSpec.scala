@@ -34,7 +34,7 @@ class GraftFacadeSpec extends SparkSpec {
     val pp = Graft.predictorFor(spark, statsDir, "fixtures/gtfs_tiny", routeId)
     val schedule = graft.gtfs.GtfsStatic.read(spark, "fixtures/gtfs_tiny")
     val sample = preds.filter(col("route_id") === routeId)
-      .join(graft.analyse.DelayAnalysis.scheduleStops(schedule)
+      .join(schedule.tripStops
         .select("trip_id", "stop_sequence", "stop_index", "stop_count"),
         Seq("trip_id", "stop_sequence"))
       .select("route_variant", "stop_index", "stop_count", "event_instant")

@@ -29,6 +29,7 @@ class SharedRelationKindsSpec extends AnyFunSuite {
   }
 
   test("the scan sees the serving kinds") {
-    assert(Set("predictor", "boarddims", "bpe", "bm25tf").subsetOf(kinds().map(_._1).toSet))
+    assert(Set("predictor", "boarddims", "tripstops", "rtstats", "rtobs", "bpe", "bm25tf")
+      .subsetOf(kinds().map(_._1).toSet))
   }
 }
